@@ -11,9 +11,11 @@ import hashlib
 import os
 import sys
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import ensure_reader_conf, normalize, table_path
 
@@ -63,6 +65,36 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize(
         name, spark.readStream.schema(schema).parquet(_stream_dir(sf_dir, name))
     )
+
+
+# run_stream's state width when SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS is
+# unset (see the comment at its use in run_stream).
+DEFAULT_STREAM_SHUFFLE_PARTITIONS = 4
+
+_STATE_WIDTH_LOCK = threading.Lock()
+
+
+def start_with_state_width(
+    spark: SparkSession, writer: DataStreamWriter, width: int
+) -> StreamingQuery:
+    """``writer.start()`` with the query's stateful operators at ``width``
+    partitions.
+
+    A stateful operator takes its partition count from
+    ``spark.sql.shuffle.partitions`` as the query starts (StreamExecution
+    clones the session conf in ``start()``), and the checkpoint keeps
+    that count for the query's lifetime. The shared session holds the
+    width only for the ``start()`` call, under a lock, so two concurrent
+    starts cannot leave the session at a stream's width. A batch query
+    planned on another thread during that call still sees it.
+    """
+    with _STATE_WIDTH_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_stream(
@@ -124,11 +156,12 @@ def run_stream(
     # real cluster SIZE IT UP to state volume ÷ target per-instance
     # state (the count is frozen into the checkpoint for the query's
     # lifetime — pick for peak state, e.g. hundreds at 100 TB rates).
-    # Scoped to the streaming query only: StreamExecution clones the
-    # session at start(), and the conf is restored before the sink
-    # read-back below, so batch plans never see it.
-    stream_parts = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "4"
+    # Scoped to the streaming query only by start_with_state_width.
+    stream_parts = int(
+        os.environ.get(
+            "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
+            DEFAULT_STREAM_SHUFFLE_PARTITIONS,
+        )
     )
 
     def one_run():
@@ -147,23 +180,19 @@ def run_stream(
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode(write_mode).parquet(out_dir)
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
+        q = start_with_state_width(
+            spark,
+            stream_df.writeStream.foreachBatch(write_batch)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True),
+            stream_parts,
+        )
         try:
-            q = (
-                stream_df.writeStream.foreachBatch(write_batch)
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                finished = q.awaitTermination(timeout_sec)
-            finally:
-                if q.isActive:
-                    q.stop()
+            finished = q.awaitTermination(timeout_sec)
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            if q.isActive:
+                q.stop()
         if q.exception() is not None:
             raise q.exception()
         if not finished:

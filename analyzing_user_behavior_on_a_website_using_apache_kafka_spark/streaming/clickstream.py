@@ -21,6 +21,17 @@ from pyspark.sql import functions as F
 DIMENSIONS = ("age", "city", "gender", "clicks")
 
 
+def _in_memory(df: DataFrame) -> bool:
+    """Is ``df`` immutable in-memory data: does every leaf of its analyzed
+    plan hold rows the driver handed over (``LogicalRDD``,
+    ``LocalRelation``) rather than read a table or files?"""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return all(
+        leaves.apply(i).nodeName() in ("LogicalRDD", "LocalRelation")
+        for i in range(leaves.size())
+    )
+
+
 def fan_out_messages(clicks: DataFrame, users: DataFrame) -> DataFrame:
     """clicks(user_id, service[, ts]) ⋈ users → (topic, value) messages.
 
@@ -29,10 +40,23 @@ def fan_out_messages(clicks: DataFrame, users: DataFrame) -> DataFrame:
     `{service}_{age|city|gender|clicks}` with stringly values ('1' for
     clicks). `home` clicks are dropped at ingest (serwer.js:72-76).
     Broadcast join: users is the small dimension side.
+
+    A streaming ``clicks`` re-plans the users side and re-broadcasts it
+    every epoch. When that side is immutable in-memory data (every leaf
+    of its plan is a ``LogicalRDD`` or ``LocalRelation``, e.g. from
+    ``createDataFrame``), it is materialized once, lazily on the first
+    epoch, as one locally checkpointed partition: later epochs read
+    that copy in the JVM instead of re-running a Python job. The stream
+    therefore joins a snapshot of those users. A users table backed by
+    JDBC or files is re-read every epoch, so users registered after the
+    stream started are joined too. The local checkpoint lives in the
+    executors' block managers; losing an executor loses it.
     """
+    side = users.select("user_id", "age", "city", "gender")
+    if clicks.isStreaming and _in_memory(side):
+        side = side.coalesce(1).localCheckpoint(eager=False)
     enriched = clicks.filter(F.col("service") != "home").join(
-        F.broadcast(users.select("user_id", "age", "city", "gender")),
-        "user_id",
+        F.broadcast(side), "user_id"
     )
     stacked = enriched.select(
         "service",

@@ -6,9 +6,11 @@ heading + three pies (age/city/gender value histograms). That is pure
 presentation over a tiny aggregate, so the engine boundary is drawn the
 same way here:
 
-- :func:`report_model` — the *data* of the report, assembled from the
-  clickstream aggregates via one driver-side ``collect()`` of the
-  O(services × values) result. Deterministic, fully tested.
+- :func:`report_model` — the *data* of the report, assembled in Python
+  from one driver-side ``collect()`` of the O(services × values)
+  ``(topic, value, cnt)`` histogram. Deterministic, fully tested; the
+  declarative ``clickstream.overall_clicks`` +
+  ``clickstream.dimension_histograms`` are its test oracle.
 - :func:`render_svg` — a ZERO-dependency renderer of the same model:
   title, overall pie, per-service dimension pies as a standalone SVG
   document (the deployable artifact this container can actually
@@ -19,10 +21,10 @@ same way here:
   encoding for the Polish labels). Deterministic — golden-file tested.
 - :func:`run_report_stream` — the 60 s processing-time trigger loop
   (``Raport.py:217-227``) as a Structured Streaming ``foreachBatch``:
-  each epoch recomputes the aggregate *incrementally* (state store)
-  instead of re-scanning the full log, and hands the model to a sink
-  callback. Spark's epoch-transactional sink replaces the reference's
-  psutil is-file-open guard (``Raport.py:91-98``).
+  each epoch recomputes the aggregate *incrementally* (state store, one
+  partition) instead of re-scanning the full log, and hands the model
+  to a sink callback. Spark's epoch-transactional sink replaces the
+  reference's psutil is-file-open guard (``Raport.py:91-98``).
 """
 
 from __future__ import annotations
@@ -31,12 +33,29 @@ import os
 import tempfile
 import uuid
 from collections.abc import Callable
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .clickstream import dimension_histograms, overall_clicks
+from ..sources.file_stream import start_with_state_width
+from .clickstream import topic_histograms
+
+# Label a NULL demographic value is rendered with (FIXTURES.md §B).
+NULL_LABEL = "brak danych"
+# State width of the report's aggregate: its state is O(services ×
+# values), ~2k rows, which one partition holds; each further partition
+# only adds a state store to open and commit every epoch.
+REPORT_STATE_WIDTH = 1
+_SIX_PLACES = Decimal("1e-6")
+
+
+def _share(cnt: int, total: int) -> float:
+    """``cnt / total`` rounded as Spark's ``round(x, 6)`` rounds a double:
+    HALF_UP on its shortest decimal string."""
+    return float(
+        Decimal(repr(cnt / total)).quantize(_SIX_PLACES, ROUND_HALF_UP)
+    )
 
 
 def report_model(histograms: DataFrame) -> dict[str, Any]:
@@ -46,18 +65,28 @@ def report_model(histograms: DataFrame) -> dict[str, Any]:
     (``:144-162``), then services sorted (deterministic stand-in for
     dict order), each with its age/city/gender histograms
     (``:165-201``); ``home`` excluded, empty histograms skipped
-    (``:169-183``).
+    (``:169-183``). A NULL value sorts after every other value of its
+    histogram and stays ``None`` in the model.
+
+    One ``collect()``: the histogram is O(services × values), and inside
+    ``foreachBatch`` every action re-runs the micro-batch.
     """
-    overall = {
-        r.service: r.total_clicks
-        for r in overall_clicks(histograms).collect()
-    }
-    dims = dimension_histograms(histograms).collect()
-    per_service: dict[str, dict[str, list[tuple[str, int, float]]]] = {}
-    for r in sorted(dims, key=lambda r: (r.service, r.dimension, r.value)):
-        per_service.setdefault(r.service, {}).setdefault(
-            r.dimension, []
-        ).append((r.value, r.cnt, r.share))
+    overall: dict[str, int] = {}
+    counts: dict[tuple[str, str], list[tuple[str | None, int]]] = {}
+    for topic, value, cnt in histograms.select("topic", "value", "cnt").collect():
+        service = topic.split("_", 1)[0]
+        dimension = topic.rsplit("_", 1)[-1]
+        if topic.endswith("_clicks"):
+            overall[service] = overall.get(service, 0) + cnt
+        if service != "home" and dimension != "clicks":
+            counts.setdefault((service, dimension), []).append((value, cnt))
+    per_service: dict[str, dict[str, list[tuple[str | None, int, float]]]] = {}
+    for (service, dimension), rows in sorted(counts.items()):
+        total = sum(c for _, c in rows)
+        per_service.setdefault(service, {})[dimension] = [
+            (v, c, _share(c, total))
+            for v, c in sorted(rows, key=lambda r: (r[0] is None, r[0] or ""))
+        ]
     return {
         "title": "Raport analizy zachowań użytkowników",
         "overall": [
@@ -74,6 +103,10 @@ def report_model(histograms: DataFrame) -> dict[str, Any]:
             for s, hists in sorted(per_service.items())
         ],
     }
+
+
+def _value_label(value: str | None, cnt: int) -> str:
+    return f"{NULL_LABEL if value is None else value} ({cnt})"
 
 
 _PALETTE = (
@@ -183,7 +216,7 @@ def render_svg(model: dict[str, Any], path: str | None = None) -> str:
         for dim in sorted(svc["histograms"]):
             rows = svc["histograms"][dim]
             total = sum(c for _, c, _ in rows) or 1
-            entries = [(f"{v} ({c})", c / total) for v, c, _ in rows]
+            entries = [(_value_label(v, c), c / total) for v, c, _ in rows]
             sections.append(
                 f'<text x="40" y="{y:.1f}" font-size="13">{_esc(dim)}</text>'
             )
@@ -305,7 +338,7 @@ def render_pdf(model: dict[str, Any], path: str | None = None) -> bytes:
                 y = _PAGE_H - 60
             rows = svc["histograms"][dim]
             total = sum(c for _, c, _ in rows) or 1
-            entries = [(f"{v} ({c})", c / total) for v, c, _ in rows]
+            entries = [(_value_label(v, c), c / total) for v, c, _ in rows]
             page.text(40, y, dim, size=13)
             y -= 10
             _pie_pdf(page, 140, y - _PIE_R, entries)
@@ -334,6 +367,7 @@ def run_report_stream(
     sink: Callable[[dict[str, Any], int], None],
     trigger_seconds: int = 60,
     available_now: bool = False,
+    checkpoint_dir: str | None = None,
 ):
     """The reference's report loop as an incremental streaming job.
 
@@ -344,10 +378,19 @@ def run_report_stream(
     ``sink(model, epoch_id)`` — where the reference writes raport.pdf
     every 60 s after re-reading the whole log (``Raport.py:217-227``),
     this touches only the new data per cycle.
+
+    Per epoch that is one Spark job: the new input, the users join and
+    the aggregate, whose state (``REPORT_STATE_WIDTH`` partition) is
+    committed once, feed the one ``collect()`` of
+    :func:`report_model`. The users side of ``fan_out_messages`` adds
+    its broadcast; in-memory users are a snapshot materialized on the
+    first epoch and read back from the JVM after that, while JDBC- or
+    file-backed users are re-read every epoch.
+
+    ``checkpoint_dir``: a caller-supplied checkpoint is where a restart
+    resumes; by default each call takes a fresh one under the temp dir.
     """
-    agg = messages.groupBy("topic", "value").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
+    agg = topic_histograms(messages)
 
     def for_each_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sink(report_model(batch_df), epoch_id)
@@ -357,7 +400,8 @@ def run_report_stream(
         .foreachBatch(for_each_batch)
         .option(
             "checkpointLocation",
-            os.path.join(
+            checkpoint_dir
+            or os.path.join(
                 tempfile.gettempdir(), "aub_report_ckpt", uuid.uuid4().hex[:12]
             ),
         )
@@ -366,4 +410,6 @@ def run_report_stream(
         writer = writer.trigger(availableNow=True)
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_with_state_width(
+        messages.sparkSession, writer, REPORT_STATE_WIDTH
+    )

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.sources.file_stream import (
+    DEFAULT_STREAM_SHUFFLE_PARTITIONS,
     run_stream,
     stream_table,
 )
@@ -45,7 +46,10 @@ def test_run_stream_scopes_state_partition_width(spark, sf_dir, tmp_path):
         for d in os.listdir(os.path.join(ckpt, "state", "0"))
         if d.isdigit()
     )
-    want = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "4")
+    want = os.environ.get(
+        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
+        DEFAULT_STREAM_SHUFFLE_PARTITIONS,
+    )
     assert len(state_parts) == int(want), state_parts
 
 
@@ -63,3 +67,41 @@ def test_stream_output_invariant_to_state_partition_width(
         return sorted(tuple(r) for r in out.collect())
 
     assert rows("3") == rows("7")
+
+
+def test_concurrent_run_streams_restore_session_width(spark, sf_dir):
+    """Five threads starting run_stream at once, with a short switch
+    interval: each sets the session's width for its own start only,
+    under a lock, so the session ends at its original width. An
+    unguarded interleaving can restore another stream's width last."""
+    import sys
+    import threading
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    n = 5
+    barrier = threading.Barrier(n)
+    results: list = []
+    errors: list = []
+
+    def run():
+        try:
+            barrier.wait(60)
+            out = run_stream(_session_agg(spark, sf_dir), "complete")
+            results.append(sorted(tuple(r) for r in out.collect()))
+        except Exception as exc:  # noqa: BLE001 - asserted below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(results) == n and all(r == results[0] for r in results)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev

@@ -8,6 +8,8 @@ is invisible to the value-correctness oracle but catastrophic at 100 TB.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -18,6 +20,10 @@ from analyzing_user_behavior_on_a_website_using_apache_kafka_spark import (
 )
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.catalog import (
     load_table,
+)
+
+TOOLS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
 )
 
 
@@ -884,7 +890,7 @@ def test_session_cache_stays_slim_across_full_persisting_sweep(spark):
     lands near the bound, and the pair tables would multiply it)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import cache_pressure
 
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.session import (

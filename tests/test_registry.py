@@ -9,6 +9,8 @@ fall outside the externally-verified window when queries are added.
 
 from __future__ import annotations
 
+import os
+
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark import (
     registry,
 )
@@ -23,6 +25,9 @@ from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.registry impo
 # family that (a) forced a window pin every round and (b) made rotation
 # at the 150-key capacity infeasible (see the registry comment).
 FAMILIES = registry.FAMILIES
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(REPO, "tools")
 
 
 def test_priority_window_is_exactly_50():
@@ -84,7 +89,7 @@ def test_survey_declares_exactly_the_served_surface():
     served one. They must be the same key set (VERDICT r2 item 6)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_coverage
 
     gen_coverage.assert_survey_declares_served_surface()
@@ -96,10 +101,10 @@ def test_rotation_staleness_invariant():
     bound (see tools/rotation_check.py docstring)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import rotation_check
 
-    problems = rotation_check.check_rotation("/root/repo")
+    problems = rotation_check.check_rotation(REPO)
     assert not problems, "\n".join(problems)
 
 
@@ -112,7 +117,7 @@ def test_rotation_checker_logic_on_synthetic_history(tmp_path, monkeypatch):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import rotation_check
 
     names = [f"q_{i:03d}" for i in range(120)]  # >100 keys -> bound 3
@@ -151,7 +156,7 @@ def test_rotation_checker_grants_declared_slips_one_round(
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import rotation_check
 
     names = [f"q_{i:03d}" for i in range(120)]  # >100 keys -> bound 3
@@ -200,14 +205,14 @@ def test_next_window_leads_are_genuine_slips():
     declaration (the proposer prints both tuples together)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import rotation_check
 
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark import (
         registry,
     )
 
-    last, latest_round = rotation_check.latest_checks("/root/repo")
+    last, latest_round = rotation_check.latest_checks(REPO)
     if not last:
         return  # fresh clone: nothing to validate against
     names = list(registry.all_queries())
@@ -234,7 +239,7 @@ def test_window_proposer_satisfies_rotation_rules():
     oldest-first, and every family keeps a representative."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from propose_window import propose
 
     # families: synthetic names reuse two real prefixes so the pin
@@ -299,7 +304,7 @@ def test_window_proposer_slips_at_bound_overflow_family_safely():
     keys, never-checked keys, and a family's sole in-window rep."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from propose_window import propose
 
     names = [f"q_agg_{i:03d}" for i in range(8)] + ["q_win_solo", "q_new"]
@@ -343,12 +348,12 @@ def test_rotation_remains_feasible_three_rounds_ahead():
     projection had no legal window two rounds out."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import gen_coverage
     import rotation_check
     from propose_window import propose
 
-    last, latest = rotation_check.latest_checks("/root/repo")
+    last, latest = rotation_check.latest_checks(REPO)
     if not last:
         return  # fresh clone — no driver history to project from
     sim = dict(last)
@@ -401,7 +406,7 @@ def test_window_proposer_pin_never_evicts_sole_family_rep():
     the q_agg fillers absorbing the squeeze."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     from propose_window import propose
 
     names = [f"q_agg_{i:03d}" for i in range(50)] + [
@@ -433,7 +438,7 @@ def test_sparse_replica_keeps_pair_output_k_linear(tmp_path):
     import duckdb
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import scale_probe
 
     # redirect the work dir so the test never touches the real cache
@@ -484,7 +489,7 @@ def test_bench_emission_is_compact_contract_line_last(capsys):
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from bench import emit
 
     compact = {
@@ -533,7 +538,7 @@ def _race_locked_replica(work, builds, results):
     import sys
     import time
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, TOOLS)
     import scale_probe
 
     out = os.path.join(work, "probe_x3")

@@ -5,6 +5,8 @@ streaming aggregate, with golden values on the hand-computed fixture."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.sources import (
     jdbc,
@@ -225,3 +227,277 @@ def test_jdbc_reader_builder(spark):
         jdbc.jdbc_reader(
             spark, "jdbc:mysql://h/db", "users", partition_column="id"
         )
+
+
+# ---------------------------------------------------------------------------
+# The Python-built model against its declarative Spark-side oracle
+# ---------------------------------------------------------------------------
+
+_USERS_DDL = "user_id long, age int, city string, gender string"
+_CLICKS_DDL = "user_id long, service string"
+
+
+def _oracle_model(histograms):
+    """The report model from ``clickstream.overall_clicks`` and
+    ``clickstream.dimension_histograms``: Spark computes the totals and
+    the rounded shares, Python only orders them (NULL values last)."""
+    overall = {
+        r.service: r.total_clicks
+        for r in clickstream.overall_clicks(histograms).collect()
+    }
+    total = sum(overall.values())
+    per_service: dict = {}
+    dims = clickstream.dimension_histograms(histograms).collect()
+    for r in sorted(
+        dims,
+        key=lambda r: (r.service, r.dimension, r.value is None, r.value or ""),
+    ):
+        per_service.setdefault(r.service, {}).setdefault(
+            r.dimension, []
+        ).append((r.value, r.cnt, r.share))
+    return {
+        "title": "Raport analizy zachowań użytkowników",
+        "overall": [
+            {"service": s, "clicks": c, "label": f"{s} ({c})", "share": c / total}
+            for s, c in sorted(overall.items())
+        ],
+        "services": [
+            {"service": s, "histograms": h} for s, h in sorted(per_service.items())
+        ],
+    }
+
+
+def test_report_model_equals_declarative_oracle(histograms):
+    assert report.report_model(histograms) == _oracle_model(histograms)
+
+
+def test_share_rounds_like_spark_round(spark):
+    """Spark's round(x, 6) on a double is HALF_UP on its shortest decimal
+    string; ties at the 7th decimal (1 / 2,000,000 = 5e-07) round up."""
+    from pyspark.sql import functions as F
+
+    pairs = [(1, 8), (2, 3), (1, 3), (5, 16), (1, 2_000_000), (3, 2_000_000), (7, 7)]
+    spark_shares = [
+        r.share
+        for r in spark.createDataFrame(pairs, "cnt long, total long")
+        .select(F.round(F.col("cnt") / F.col("total"), 6).alias("share"))
+        .collect()
+    ]
+    assert [report._share(c, t) for c, t in pairs] == spark_shares
+    assert report._share(1, 2_000_000) == 0.000001
+
+
+_user_strategy = st.tuples(
+    st.one_of(st.none(), st.integers(18, 70)),
+    st.one_of(st.none(), st.sampled_from(["Gdansk", "Sopot", "Gdynia"])),
+    st.one_of(st.none(), st.sampled_from(["Kobieta", "Mężczyzna"])),
+)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    users=st.lists(_user_strategy, min_size=1, max_size=4),
+    # ids 0-5 against at most 4 users: some clicks have no user
+    clicks=st.lists(
+        st.tuples(
+            st.integers(0, 5), st.sampled_from(["gitlab", "kafka", "git", "home"])
+        ),
+        max_size=30,
+    ),
+)
+def test_report_model_matches_oracle_on_random_logs(spark, users, clicks):
+    users_df = spark.createDataFrame(
+        [(i, *u) for i, u in enumerate(users)], _USERS_DDL
+    )
+    hist = clickstream.topic_histograms(
+        clickstream.fan_out_messages(
+            spark.createDataFrame(clicks, _CLICKS_DDL), users_df
+        )
+    )
+    assert report.report_model(hist) == _oracle_model(hist)
+
+
+# ---------------------------------------------------------------------------
+# NULL demographics, state width and the users side of the stream
+# ---------------------------------------------------------------------------
+
+_NULL_USERS = [
+    (1, 30, "Gdansk", "Kobieta"),
+    (2, 25, "Sopot", None),  # the reference's register INSERT drops gender
+    (3, None, None, "Mężczyzna"),
+]
+_NULL_CLICKS = [(1, "gitlab"), (2, "gitlab"), (2, "gitlab"), (3, "kafka"), (2, "home")]
+
+
+def _write_clicks(directory, index: int, clicks) -> None:
+    """One JSON-lines click file, renamed into place so a file source
+    never lists it half written."""
+    import json
+    import os
+
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".clicks-{index}.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        for uid, service in clicks:
+            fh.write(json.dumps({"user_id": uid, "service": service}) + "\n")
+    os.replace(tmp, os.path.join(directory, f"clicks-{index}.json"))
+
+
+def _batch_model(spark, clicks_dir, users):
+    clicks = spark.read.schema(_CLICKS_DDL).json(str(clicks_dir))
+    return report.report_model(
+        clickstream.topic_histograms(clickstream.fan_out_messages(clicks, users))
+    )
+
+
+def _run_available_now(spark, clicks_dir, users, ckpt, files_per_epoch=None):
+    reader = spark.readStream.schema(_CLICKS_DDL)
+    if files_per_epoch is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_epoch)
+    stream = reader.json(str(clicks_dir))
+    captured: list = []
+    q = report.run_report_stream(
+        clickstream.fan_out_messages(stream, users),
+        lambda model, epoch: captured.append(model),
+        available_now=True,
+        checkpoint_dir=str(ckpt),
+    )
+    return q, captured
+
+
+def test_null_demographics_stream_equals_batch(spark, tmp_path):
+    """A NULL gender, age or city is a histogram value like any other:
+    counted, sorted after the non-NULL values, kept as ``None`` in the
+    model and rendered as ``NULL_LABEL``. The streamed model equals the
+    batch model."""
+    users = spark.createDataFrame(_NULL_USERS, _USERS_DDL)
+    _write_clicks(tmp_path / "clicks", 0, _NULL_CLICKS)
+    q, captured = _run_available_now(
+        spark, tmp_path / "clicks", users, tmp_path / "ckpt"
+    )
+    assert q.awaitTermination(300), "report run did not finish"
+    assert q.exception() is None
+    batch = _batch_model(spark, tmp_path / "clicks", users)
+    assert captured and captured[-1] == batch
+    gitlab = {s["service"]: s["histograms"] for s in batch["services"]}["gitlab"]
+    assert gitlab["gender"] == [("Kobieta", 1, 0.333333), (None, 2, 0.666667)]
+    kafka = {s["service"]: s["histograms"] for s in batch["services"]}["kafka"]
+    assert kafka["age"] == [(None, 1, 1.0)]
+    assert f"{report.NULL_LABEL} (2)" in report.render_svg(batch)
+    # '(' is escaped in PDF strings
+    assert report.NULL_LABEL.encode() + rb" \(2\)" in report.render_pdf(batch)
+
+
+def test_report_stream_state_is_one_partition(spark, tmp_path):
+    """The report's aggregate runs at ``REPORT_STATE_WIDTH`` (1) state
+    partitions, and starting it leaves the session's shuffle width as it
+    was."""
+    import os
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    users = spark.createDataFrame(_NULL_USERS, _USERS_DDL)
+    _write_clicks(tmp_path / "clicks", 0, _NULL_CLICKS)
+    q, captured = _run_available_now(
+        spark, tmp_path / "clicks", users, tmp_path / "ckpt"
+    )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert q.awaitTermination(300), "report run did not finish"
+    assert captured
+    state = os.path.join(str(tmp_path / "ckpt"), "state", "0")
+    assert [d for d in os.listdir(state) if d.isdigit()] == ["0"]
+    assert report.REPORT_STATE_WIDTH == 1
+
+
+def _rdd_scan_lineages(plan) -> list[str]:
+    """Lineage (``RDD.toDebugString``) of every RDD scan of a JVM
+    physical plan."""
+    leaves = plan.collectLeaves()
+    return [
+        leaves.apply(i).rdd().toDebugString()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "RDDScanExec"
+    ]
+
+
+def test_in_memory_users_are_read_from_their_checkpoint(spark, tmp_path):
+    """``createDataFrame`` users are a Python RDD. The stream broadcasts
+    them from their local checkpoint, so no epoch re-runs the Python
+    job; the batch plan keeps the Python RDD."""
+    users = spark.createDataFrame(_NULL_USERS, _USERS_DDL)
+    (lineage,) = _rdd_scan_lineages(users._jdf.queryExecution().sparkPlan())
+    assert "PythonRDD" in lineage
+    for i in range(2):  # two files, two epochs
+        _write_clicks(tmp_path / "clicks", i, _NULL_CLICKS)
+    q, captured = _run_available_now(
+        spark, tmp_path / "clicks", users, tmp_path / "ckpt", files_per_epoch=1
+    )
+    assert q.awaitTermination(300), "report run did not finish"
+    assert len(captured) == 2
+    epoch_plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    (lineage,) = _rdd_scan_lineages(epoch_plan)
+    assert "LocalCheckpointRDD" in lineage and "PythonRDD" not in lineage
+    assert captured[-1] == _batch_model(spark, tmp_path / "clicks", users)
+
+
+def test_report_stream_joins_users_registered_after_start(spark, tmp_path):
+    """JDBC-backed users are re-read every epoch: a user registered
+    after the stream started is counted once their clicks arrive. (A
+    static parquet read would not do: it fixes its file listing when
+    the frame is created.)"""
+    import os
+    import tempfile
+
+    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.sources.jdbc import (
+        DERBY_DRIVER,
+        derby_url,
+        jdbc_reader,
+        jdbc_writer,
+    )
+
+    # keep Derby's log out of the working directory (a no-op once the
+    # engine has booted)
+    spark._jvm.System.setProperty(
+        "derby.stream.error.file",
+        os.path.join(tempfile.gettempdir(), "derby.log"),
+    )
+    url = derby_url(str(tmp_path / "users_db"))
+    coltypes = "city VARCHAR(64), gender VARCHAR(16)"
+
+    def register(rows, mode):
+        jdbc_writer(
+            spark.createDataFrame(rows, _USERS_DDL), url, "users",
+            mode=mode, driver=DERBY_DRIVER, column_types=coltypes,
+        )
+
+    register([(1, 30, "Gdansk", "Kobieta")], "overwrite")
+    users = jdbc_reader(spark, url, "users", driver=DERBY_DRIVER).load()
+    clicks_dir = tmp_path / "clicks"
+    _write_clicks(clicks_dir, 0, [(1, "gitlab"), (2, "gitlab")])
+    stream = spark.readStream.schema(_CLICKS_DDL).json(str(clicks_dir))
+    captured: list = []
+    q = report.run_report_stream(
+        clickstream.fan_out_messages(stream, users),
+        lambda model, epoch: captured.append(model),
+        trigger_seconds=0,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        q.processAllAvailable()
+        # user 2 is not registered yet: their click joins nothing
+        assert [e["clicks"] for e in captured[-1]["overall"]] == [1]
+        register([(2, 41, "Sopot", "Mężczyzna")], "append")
+        _write_clicks(clicks_dir, 1, [(2, "kafka"), (2, "kafka")])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert q.exception() is None
+    model = captured[-1]
+    assert {e["service"]: e["clicks"] for e in model["overall"]} == {
+        "gitlab": 1, "kafka": 2,
+    }
+    kafka = {s["service"]: s["histograms"] for s in model["services"]}["kafka"]
+    assert kafka["gender"] == [("Mężczyzna", 2, 1.0)]

@@ -11,7 +11,8 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark import (
     registry,
@@ -56,7 +57,7 @@ def assert_survey_declares_served_surface() -> None:
     (registering one without clearing it from ``_STAGED`` also fails)."""
     import re
 
-    with open("/root/repo/SURVEY.md") as fh:
+    with open(os.path.join(ROOT, "SURVEY.md")) as fh:
         survey = set(re.findall(r"`(q_[a-z0-9_]+)`", fh.read()))
     served = set(registry.all_queries())
     missing_decl = sorted(served - survey)
@@ -77,7 +78,7 @@ def main() -> None:
     rows = []
     for name, fn in qs.items():
         f = inspect.unwrap(fn)
-        path = os.path.relpath(inspect.getsourcefile(f), "/root/repo")
+        path = os.path.relpath(inspect.getsourcefile(f), ROOT)
         line = inspect.getsourcelines(f)[1]
         doc = (inspect.getdoc(f) or "").split("\n")[0].rstrip(".")
         kind = "sql" if name in oracles else "rows"
@@ -109,7 +110,7 @@ def main() -> None:
         out += ["", "## Other", "", "| query | impl | oracle | semantics |", "|---|---|---|---|"]
         for name, loc, kind, doc in leftover:
             out.append(f"| `{name}` | `{loc}` | {kind} | {doc} |")
-    with open("/root/repo/COVERAGE.md", "w") as fh:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as fh:
         fh.write("\n".join(out) + "\n")
     print(f"wrote COVERAGE.md: {len(rows)} queries")
 

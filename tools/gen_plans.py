@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import EXTENDED, HEADLINE
 
@@ -50,7 +51,7 @@ def main() -> None:
             f"- scans read: {['/'.join(s) for s in scans]}",
             f"- broadcast hash joins: {plans.broadcast_hash_join_count(df)}",
         ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out) + "\n")
     print(f"wrote PLANS.md for {len(HEADLINE + EXTENDED)} queries")
 
