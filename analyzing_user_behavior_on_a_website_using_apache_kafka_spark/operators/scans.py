@@ -334,12 +334,12 @@ def q_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaving the other 4 region partitions' files untouched.
 
     The pattern: upserted-partition contents = changes ∪ (existing rows
-    not superseded), written with
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` so unchanged
-    partitions never rewrite. At 100 TB with dt-partitioned logs this is
-    the difference between rewriting one day and rewriting the table;
-    row-level MERGE needs a table format (Delta/Iceberg) and is out of
-    scope for a plain-parquet engine.
+    not superseded), written with the per-write option
+    ``partitionOverwriteMode=dynamic`` (the session conf is untouched) so
+    unchanged partitions never rewrite. At 100 TB with dt-partitioned
+    logs this is the difference between rewriting one day and rewriting
+    the table; row-level MERGE needs a table format (Delta/Iceberg) and
+    is out of scope for a plain-parquet engine.
     """
     # per-run directory: a fixed path shared across concurrent runs
     # would let one run's overwrite commit race another's read-back
@@ -371,18 +371,9 @@ def q_sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = existing.join(
         changes.select("n_nationkey"), "n_nationkey", "left_anti"
     ).select("n_nationkey", "n_name", "n_regionkey").localCheckpoint()
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        changes.unionByName(keep).write.mode("overwrite").partitionBy(
-            "n_regionkey"
-        ).parquet(out)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
+    changes.unionByName(keep).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("n_regionkey").parquet(out)
     return spark.read.parquet(out).select(
         "n_nationkey", "n_name", F.col("n_regionkey").cast("bigint")
     )

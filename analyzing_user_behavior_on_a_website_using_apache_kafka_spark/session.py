@@ -19,7 +19,15 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
+# A quarter of the host's memory (the JVM's own default max-heap share):
+# a heap the JVM may grow into ends up resident, and two driver JVMs (a
+# test session and a plan generator) must fit side by side.
+DEFAULT_DRIVER_MEM = (
+    f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**22}m"
+)
 
 
 def get_spark(
@@ -101,7 +109,10 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or DEFAULT_DRIVER_MEM,
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         # bucketed saveAsTable targets (co-located join tests) land in /tmp

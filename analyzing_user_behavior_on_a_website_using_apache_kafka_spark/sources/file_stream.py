@@ -1,21 +1,27 @@
-"""Replayable file-based stream source (Kafka stand-in for tests/driver).
+"""Replayable file-based stream source (Kafka stand-in for tests/driver),
+and the one place the engine starts a streaming query.
 
 Structured Streaming's file source reads the same parquet fixtures as the
 batch queries, so every streaming job can be verified against its batch
 plan on identical input (SURVEY §5.2 self-oracle strategy).
+:func:`start_stream` owns a query's state width and checkpoint;
+:func:`run_to_completion` runs an AvailableNow query to its end.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import sys
 import tempfile
 import threading
 import uuid
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import StreamingQuery
 
 from ..catalog import ensure_reader_conf, normalize, table_path
 
@@ -67,34 +73,105 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-# run_stream's state width when SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS is
-# unset (see the comment at its use in run_stream).
+# State width of run_stream's stateful operators: one state store per
+# partition per micro-batch is pure fixed cost over KB-scale local state
+# (stream-stream joins at sf0.1: 7.7-8.1 s at 32 → 3.6-4.2 s at 4). On a
+# cluster, size it to state volume; the checkpoint freezes the count.
 DEFAULT_STREAM_SHUFFLE_PARTITIONS = 4
 
 _STATE_WIDTH_LOCK = threading.Lock()
 
 
-def start_with_state_width(
-    spark: SparkSession, writer: DataStreamWriter, width: int
-) -> StreamingQuery:
-    """``writer.start()`` with the query's stateful operators at ``width``
-    partitions.
+class _OwnedCheckpointQuery(StreamingQuery):
+    """A query on a checkpoint :func:`start_stream` picked: stopping it
+    also removes the checkpoint, which exists only to resume this one
+    query."""
 
-    A stateful operator takes its partition count from
-    ``spark.sql.shuffle.partitions`` as the query starts (StreamExecution
-    clones the session conf in ``start()``), and the checkpoint keeps
-    that count for the query's lifetime. The shared session holds the
-    width only for the ``start()`` call, under a lock, so two concurrent
-    starts cannot leave the session at a stream's width. A batch query
-    planned on another thread during that call still sees it.
+    def __init__(self, query: StreamingQuery, checkpoint: str) -> None:
+        super().__init__(query._jsq)
+        self._checkpoint = checkpoint
+
+    def stop(self) -> None:
+        try:
+            super().stop()
+        finally:
+            shutil.rmtree(self._checkpoint, ignore_errors=True)
+
+
+def start_stream(
+    stream_df: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    output_mode: str,
+    trigger: dict[str, Any],
+    width: int,
+    checkpoint_dir: str | None = None,
+) -> StreamingQuery:
+    """Start ``stream_df`` as a ``foreachBatch(write_batch)`` query: the
+    one place the engine starts a streaming query.
+
+    ``trigger`` holds the keyword of ``DataStreamWriter.trigger``, e.g.
+    ``{"availableNow": True}``. The query's stateful operators run at
+    ``width`` partitions: a stateful operator takes its partition count
+    from ``spark.sql.shuffle.partitions`` as the query starts
+    (StreamExecution clones the session conf in ``start()``), and the
+    checkpoint keeps that count for the query's lifetime. The shared
+    session holds the width only for the ``start()`` call, under a lock,
+    so two concurrent starts cannot leave the session at a stream's
+    width. A batch query planned on another thread during that call
+    still sees it. State uses the session's state store provider.
+
+    ``checkpoint_dir``: a caller-supplied checkpoint is where a restart
+    resumes, and is never removed. Without one the query gets a fresh
+    checkpoint under the temp dir, removed when the query is stopped.
     """
+    spark = stream_df.sparkSession
+    checkpoint = checkpoint_dir or os.path.join(
+        tempfile.gettempdir(), "aub_ckpt", uuid.uuid4().hex[:12]
+    )
+    writer = (
+        stream_df.writeStream.foreachBatch(write_batch)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**trigger)
+    )
     with _STATE_WIDTH_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
-            return writer.start()
+            query = writer.start()
+        except BaseException:
+            if checkpoint_dir is None:
+                shutil.rmtree(checkpoint, ignore_errors=True)
+            raise
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+    if checkpoint_dir is None:
+        return _OwnedCheckpointQuery(query, checkpoint)
+    return query
+
+
+def run_to_completion(query: StreamingQuery, timeout_sec: float) -> None:
+    """Wait for a query started with a finite trigger (AvailableNow) to
+    end, then stop it, which also drops a checkpoint the engine picked.
+
+    Re-raises the query's exception. A query still running after
+    ``timeout_sec`` was stopped mid-processing, so its sink holds
+    PARTIAL results: that raises ``TimeoutError`` rather than let them
+    surface as a silent row-count or value mismatch (observed once: a
+    loaded-rig sweep failed q_stream_stream_left this way at an old
+    120 s budget).
+    """
+    try:
+        finished = query.awaitTermination(timeout_sec)
+    finally:
+        query.stop()
+    if query.exception() is not None:
+        raise query.exception()
+    if not finished:
+        raise TimeoutError(
+            f"streaming query still running after {timeout_sec}s — "
+            "refusing to return partial sink contents"
+        )
 
 
 def run_stream(
@@ -107,115 +184,51 @@ def run_stream(
     through a foreachBatch→parquet sink; return the sink directory read
     back as a (distributed) batch DataFrame.
 
-    This replaced the r3–r11 memory-sink harness: the memory sink
-    collects EVERY result row into the driver's heap (complete mode
-    holds the entire aggregate table there), so a query whose output
-    scales with the data — q_stream_session's O(users × sessions) rows,
-    q_stream_kafka_source's O(events) — turned the verification path
-    into the exact driver-side materialization the engine bans
-    elsewhere (SCALE.md measured q_stream_session at exponent 1.06,
-    output-linear on the driver). foreachBatch instead hands each
-    micro-batch over as a batch DataFrame whose parquet write runs with
-    the executors' parallelism; the driver only coordinates, and the
-    returned frame is a parquet scan that stays distributed through
-    whatever comparison follows. Mode mapping inside the writer:
-    complete overwrites the directory each trigger (last batch leaves
-    the full result — the memory sink's truncate-and-refill, minus the
-    driver heap), append/update append their per-batch emissions
-    (byte-for-byte the rows the memory sink would have appended).
+    foreachBatch hands each micro-batch over as a batch DataFrame whose
+    parquet write runs with the executors' parallelism, so no result row
+    is held on the driver (a memory sink would hold complete mode's whole
+    table there). Complete mode overwrites the directory each trigger, so
+    the last batch leaves the full result; append and update append each
+    batch's emissions. AvailableNow processes everything present, then
+    stops: the batch-like trigger that still exercises the incremental
+    and stateful machinery.
 
-    AvailableNow = process everything present, then stop — the batch-like
-    trigger that still exercises the incremental/stateful machinery. The
-    production analog swaps AvailableNow for a processing-time trigger
-    and points the same foreachBatch writer (or a native kafka/parquet
-    sink) at durable storage.
-
-    State lives in RocksDB (bundled with Spark ≥3.2): state size is
-    bounded by disk, not executor heap — the only viable provider when
-    dedup/session state reaches 100 TB-scale key counts. Set lazily so a
-    vanilla consumer session gets it too; HDFSBacked remains a one-conf
-    rollback.
+    Stateful operators run at ``DEFAULT_STREAM_SHUFFLE_PARTITIONS``
+    partitions, read at call time, on the session's state store provider.
+    ``checkpoint_dir``: a caller-supplied checkpoint is kept after the run
+    (state-introspection tests and tools/state_probe.py read the stores
+    back); by default each attempt takes a fresh one, removed however the
+    attempt ends.
     """
     spark = stream_df.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     write_mode = "overwrite" if output_mode == "complete" else "append"
-    # r17 (guide §5, VERDICT r16 item 5): stateful operators take their
-    # partition count from spark.sql.shuffle.partitions at FIRST batch
-    # (AQE is disabled in stateful workloads, so the session's 32 is
-    # literal), and every stateful op then opens+commits one RocksDB
-    # instance PER partition PER micro-batch. For the local one-batch
-    # AvailableNow harness over KB-scale state that fan-out is pure
-    # fixed cost: interleaved same-session A/B at sf0.1 measured
-    # stream-stream joins 7.7-8.1 s @32 → 3.6 s @8 → 3.6-4.2 s @4
-    # (2.2×), dedup 2.7→1.7, session 2.0→1.4, complete_agg 2.2→1.6 @4.
-    # LOCAL-RIG default 4, env-parameterized like the scan knobs; on a
-    # real cluster SIZE IT UP to state volume ÷ target per-instance
-    # state (the count is frozen into the checkpoint for the query's
-    # lifetime — pick for peak state, e.g. hundreds at 100 TB rates).
-    # Scoped to the streaming query only by start_with_state_width.
-    stream_parts = int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-            DEFAULT_STREAM_SHUFFLE_PARTITIONS,
-        )
-    )
 
     def one_run():
-        name = f"sink_{uuid.uuid4().hex[:12]}"
-        # checkpoint_dir: caller-supplied path RETAINED after the run
-        # (state-introspection tests and tools/state_probe.py read the
-        # stores back through the statestore source). Default: a fresh
-        # throwaway path, deleted on success as before.
-        checkpoint = checkpoint_dir or os.path.join(
-            tempfile.gettempdir(), "aub_ckpt", name
-        )
         out_dir = os.path.join(
-            tempfile.gettempdir(), "aub_streamsink", name
+            tempfile.gettempdir(),
+            "aub_streamsink",
+            f"sink_{uuid.uuid4().hex[:12]}",
         )
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode(write_mode).parquet(out_dir)
 
-        q = start_with_state_width(
-            spark,
-            stream_df.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True),
-            stream_parts,
-        )
         try:
-            finished = q.awaitTermination(timeout_sec)
-        finally:
-            if q.isActive:
-                q.stop()
-        if q.exception() is not None:
-            raise q.exception()
-        if not finished:
-            # awaitTermination TIMED OUT: the query was stopped
-            # mid-processing and the sink directory holds PARTIAL
-            # results. Returning them would surface as a silent
-            # row-count/value mismatch in the oracle gate (observed
-            # once: a loaded-rig sweep failed q_stream_stream_left this
-            # way at the old 120 s budget) — refuse loudly instead.
-            raise TimeoutError(
-                f"streaming query still running after {timeout_sec}s — "
-                "refusing to return partial sink contents"
+            run_to_completion(
+                start_stream(
+                    stream_df,
+                    write_batch,
+                    output_mode,
+                    {"availableNow": True},
+                    DEFAULT_STREAM_SHUFFLE_PARTITIONS,
+                    checkpoint_dir,
+                ),
+                timeout_sec,
             )
-        # the checkpoint (RocksDB state + offset log) exists only to
-        # resume THIS run, and every run gets a fresh one — drop it so
-        # a long driver session's dozens of streaming verifications
-        # don't accumulate state dirs in /tmp — UNLESS the caller
-        # supplied the path (retention is then the point). The SINK
-        # dir must stay: the returned DataFrame reads it lazily.
-        if checkpoint_dir is None:
-            import shutil
-
-            shutil.rmtree(checkpoint, ignore_errors=True)
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+        # the sink dir must stay: the returned DataFrame reads it lazily
         if not any(
             f.endswith(".parquet")
             for f in (os.listdir(out_dir) if os.path.isdir(out_dir) else [])
@@ -225,13 +238,12 @@ def run_stream(
             return spark.createDataFrame([], stream_df.schema)
         return spark.read.parquet(out_dir)
 
-    # One retry with fresh checkpoint + sink dir, scoped to the KNOWN
-    # transient: RocksDB snapshot/changelog uploads abort sporadically
-    # under heavy rig load (observed once in ~10² runs). Anything else —
-    # plan errors, state-schema mismatches, real nondeterministic bugs —
-    # re-raises immediately so the verification harness never masks it,
-    # and the retry is logged loudly so a "green after retry" run is
-    # visible.
+    # One retry with a fresh checkpoint + sink dir, scoped to the KNOWN
+    # transients under heavy rig load: a state store that fails to load,
+    # and a timeout. Anything else — plan errors, state-schema mismatches,
+    # real nondeterministic bugs — re-raises immediately so the
+    # verification harness never masks it, and the retry is logged
+    # loudly so a "green after retry" run is visible.
     try:
         return one_run()
     except Exception as exc:
@@ -245,10 +257,7 @@ def run_stream(
         transient = any(
             marker in msg
             for marker in (
-                "RocksDB",  # snapshot/changelog upload abort
                 "CANNOT_LOAD_STATE_STORE",
-                # load-induced timeout (see one_run): a fresh attempt on
-                # a momentarily-quieter rig routinely completes
                 "refusing to return partial sink contents",
             )
         )

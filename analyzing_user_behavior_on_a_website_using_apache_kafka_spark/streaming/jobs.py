@@ -9,22 +9,30 @@ exercised — only the trigger is batch-like.
 Scale notes: state-store keys here are (window, group) pairs — bounded by
 watermarks everywhere except complete mode, which is only valid because
 the reference's report aggregate is O(services × dimension values), tiny
-at any scale (SURVEY §0.2). Production: RocksDB state store + TTL'd
-state for dedup/session jobs.
+at any scale (SURVEY §0.2). Every query starts through
+``sources.file_stream.start_stream`` on the session's state store
+provider (Spark's default); a production deployment whose dedup/session
+state outgrows executor heap sets the RocksDB provider in its own
+session conf, plus TTL'd state.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from ..sources.file_stream import run_stream, stream_table
+from ..sources.file_stream import (
+    DEFAULT_STREAM_SHUFFLE_PARTITIONS,
+    run_stream,
+    run_to_completion,
+    start_stream,
+    stream_table,
+)
 
 
 @query(
@@ -405,14 +413,9 @@ def type_count_upsert(final: str):
                 .groupBy("event_type")
                 .agg(F.sum("n_events").alias("n_events"))
             )
-        prev = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            agg.write.mode("overwrite").partitionBy("event_type").parquet(
-                final
-            )
-        finally:
-            sp.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        agg.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("event_type").parquet(final)
 
     return upsert
 
@@ -449,30 +452,18 @@ def q_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="aub_sink_feb_")
     final = os.path.join(out, "totals")
     ev = stream_table(spark, sf_dir, "events").select("event_type")
-    name = f"feb_{uuid.uuid4().hex[:12]}"
-    q = (
-        ev.writeStream.foreachBatch(type_count_upsert(final))
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), "aub_ckpt", name),
-        )
-        .trigger(availableNow=True)
-        .start()
+    # no retry, unlike run_stream: a retried upsert into the same table
+    # would count the batches the failed attempt committed twice
+    run_to_completion(
+        start_stream(
+            ev,
+            type_count_upsert(final),
+            "append",
+            {"availableNow": True},
+            DEFAULT_STREAM_SHUFFLE_PARTITIONS,
+        ),
+        300,
     )
-    try:
-        finished = q.awaitTermination(300)
-    finally:
-        if q.isActive:
-            q.stop()
-    if q.exception() is not None:
-        raise q.exception()
-    if not finished:
-        # same contract as run_stream: a timed-out run means the
-        # sink table holds PARTIAL totals — refuse, never return them
-        raise TimeoutError(
-            "foreachBatch sink still running after 300s — refusing to "
-            "read back partial totals"
-        )
     return spark.read.parquet(final).select(
         "event_type", F.col("n_events").cast("bigint").alias("n_events")
     )

@@ -30,15 +30,13 @@ same way here:
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 from collections.abc import Callable
 from decimal import ROUND_HALF_UP, Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame
 
-from ..sources.file_stream import start_with_state_width
+from ..sources.file_stream import start_stream
 from .clickstream import topic_histograms
 
 # Label a NULL demographic value is rendered with (FIXTURES.md §B).
@@ -388,28 +386,23 @@ def run_report_stream(
     file-backed users are re-read every epoch.
 
     ``checkpoint_dir``: a caller-supplied checkpoint is where a restart
-    resumes; by default each call takes a fresh one under the temp dir.
+    resumes. By default each call takes a fresh one under the temp dir,
+    removed when the returned query is stopped.
     """
-    agg = topic_histograms(messages)
 
     def for_each_batch(batch_df: DataFrame, epoch_id: int) -> None:
         sink(report_model(batch_df), epoch_id)
 
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(for_each_batch)
-        .option(
-            "checkpointLocation",
-            checkpoint_dir
-            or os.path.join(
-                tempfile.gettempdir(), "aub_report_ckpt", uuid.uuid4().hex[:12]
-            ),
-        )
+    trigger = (
+        {"availableNow": True}
+        if available_now
+        else {"processingTime": f"{trigger_seconds} seconds"}
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return start_with_state_width(
-        messages.sparkSession, writer, REPORT_STATE_WIDTH
+    return start_stream(
+        topic_histograms(messages),
+        for_each_batch,
+        "complete",
+        trigger,
+        REPORT_STATE_WIDTH,
+        checkpoint_dir,
     )

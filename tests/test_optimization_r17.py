@@ -12,8 +12,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.sources import (
+    file_stream,
+)
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.sources.file_stream import (
-    DEFAULT_STREAM_SHUFFLE_PARTITIONS,
     run_stream,
     stream_table,
 )
@@ -28,8 +30,8 @@ def _session_agg(spark, sf_dir):
 
 def test_run_stream_scopes_state_partition_width(spark, sf_dir, tmp_path):
     """r17: run_stream lowers spark.sql.shuffle.partitions to the
-    SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS width for the streaming query
-    (stateful fan-out = one RocksDB instance per partition per batch)
+    DEFAULT_STREAM_SHUFFLE_PARTITIONS width for the streaming query
+    (stateful fan-out = one state store per partition per batch)
     and RESTORES the session value afterwards — batch plans must never
     inherit the streaming width. The checkpoint's state directory
     carries the proof: one numbered dir per state partition."""
@@ -46,10 +48,7 @@ def test_run_stream_scopes_state_partition_width(spark, sf_dir, tmp_path):
         for d in os.listdir(os.path.join(ckpt, "state", "0"))
         if d.isdigit()
     )
-    want = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS",
-        DEFAULT_STREAM_SHUFFLE_PARTITIONS,
-    )
+    want = file_stream.DEFAULT_STREAM_SHUFFLE_PARTITIONS
     assert len(state_parts) == int(want), state_parts
 
 
@@ -61,12 +60,14 @@ def test_stream_output_invariant_to_state_partition_width(
     losslessness premise — the driver oracle covers the default width,
     this covers the knob itself)."""
 
-    def rows(width: str):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", width)
+    def rows(width: int):
+        monkeypatch.setattr(
+            file_stream, "DEFAULT_STREAM_SHUFFLE_PARTITIONS", width
+        )
         out = run_stream(_session_agg(spark, sf_dir), "complete")
         return sorted(tuple(r) for r in out.collect())
 
-    assert rows("3") == rows("7")
+    assert rows(3) == rows(7)
 
 
 def test_concurrent_run_streams_restore_session_width(spark, sf_dir):

@@ -79,7 +79,10 @@ def test_report_stream_incremental(spark, histograms, sf_dir, tmp_path):
         svg_write(model, epoch)
 
     q = report.run_report_stream(stream, sink, available_now=True)
-    assert q.awaitTermination(300), "report run did not finish"
+    try:
+        assert q.awaitTermination(300), "report run did not finish"
+    finally:
+        q.stop()  # drops the checkpoint the engine picked
     assert captured, "sink never invoked"
     batch_model = report.report_model(histograms)
     assert captured[-1] == batch_model
@@ -501,3 +504,64 @@ def test_report_stream_joins_users_registered_after_start(spark, tmp_path):
     }
     kafka = {s["service"]: s["histograms"] for s in model["services"]}["kafka"]
     assert kafka["gender"] == [("Mężczyzna", 2, 1.0)]
+
+
+def test_report_restart_resumes_from_its_checkpoint(spark, tmp_path):
+    """Stopped after its first epoch and restarted (AvailableNow) on the
+    same checkpoint, the report resumes where it stopped: the final
+    model equals the batch model and the generator's ``Counter`` —
+    nothing counted twice, nothing lost."""
+    import time
+    from collections import Counter
+
+    users = spark.createDataFrame(_NULL_USERS, _USERS_DDL)
+    clicks_dir, ckpt = tmp_path / "clicks", tmp_path / "ckpt"
+    files = [
+        [(1, "gitlab"), (2, "kafka")],
+        [(2, "gitlab"), (3, "kafka"), (2, "home")],
+        [(1, "kafka"), (9, "gitlab")],  # user 9 is unknown
+        [(3, "gitlab"), (3, "gitlab")],
+        [(1, "git"), (2, "git")],
+        [(2, "kafka"), (1, "gitlab")],
+    ]
+    for i, clicks in enumerate(files):
+        _write_clicks(clicks_dir, i, clicks)
+    stream = (
+        spark.readStream.schema(_CLICKS_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(clicks_dir))
+    )
+    first: list = []
+    q = report.run_report_stream(
+        clickstream.fan_out_messages(stream, users),
+        lambda model, epoch: first.append(model),
+        trigger_seconds=0,
+        checkpoint_dir=str(ckpt),
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while not first and time.monotonic() < deadline:
+            time.sleep(0.02)
+    finally:
+        q.stop()
+    assert q.exception() is None and first
+
+    def overall(model) -> dict:
+        return {e["service"]: e["clicks"] for e in model["overall"]}
+
+    want = Counter(
+        service
+        for clicks in files
+        for uid, service in clicks
+        if service != "home" and uid in {u[0] for u in _NULL_USERS}
+    )
+    # the first run stopped part-way, so the restart has files to read
+    assert sum(overall(first[-1]).values()) < sum(want.values())
+
+    q, resumed = _run_available_now(
+        spark, clicks_dir, users, ckpt, files_per_epoch=1
+    )
+    assert q.awaitTermination(300), "report restart did not finish"
+    assert q.exception() is None and resumed
+    assert resumed[-1] == _batch_model(spark, clicks_dir, users)
+    assert overall(resumed[-1]) == dict(want)

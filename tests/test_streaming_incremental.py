@@ -7,7 +7,6 @@ still equal the all-at-once batch answer."""
 
 from __future__ import annotations
 
-import os
 import uuid
 
 import pytest
@@ -32,7 +31,7 @@ def split_log(spark, sf_dir, tmp_path_factory):
     return d
 
 
-def _run_incremental(spark, split_log, agg_builder, output_mode):
+def _run_incremental(spark, split_log, agg_builder, output_mode, tmp_path):
     schema = "event_id bigint, user_id bigint, event_type string, ts timestamp"
     stream = (
         spark.readStream.schema(schema)
@@ -45,9 +44,7 @@ def _run_incremental(spark, split_log, agg_builder, output_mode):
         .writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .option(
-            "checkpointLocation", os.path.join("/tmp/aub_ckpt", name)
-        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -56,7 +53,9 @@ def _run_incremental(spark, split_log, agg_builder, output_mode):
     return spark.table(name)
 
 
-def test_complete_agg_accumulates_across_batches(spark, sf_dir, split_log):
+def test_complete_agg_accumulates_across_batches(
+    spark, sf_dir, split_log, tmp_path
+):
     out = _run_incremental(
         spark,
         split_log,
@@ -64,6 +63,7 @@ def test_complete_agg_accumulates_across_batches(spark, sf_dir, split_log):
             F.count(F.lit(1)).alias("cnt")
         ),
         "complete",
+        tmp_path,
     )
     got = {(r.event_type, r.cnt) for r in out.collect()}
     want = {
@@ -181,7 +181,7 @@ def test_stream_stream_join_state_spans_batches(spark, sf_dir, tmp_path):
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", os.path.join("/tmp/aub_ckpt", name))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -209,7 +209,7 @@ def test_stream_stream_join_state_spans_batches(spark, sf_dir, tmp_path):
     assert got == want and want, (len(got), len(want))
 
 
-def test_streaming_dedup_across_batches(spark, sf_dir, split_log):
+def test_streaming_dedup_across_batches(spark, sf_dir, split_log, tmp_path):
     out = _run_incremental(
         spark,
         split_log,
@@ -217,6 +217,7 @@ def test_streaming_dedup_across_batches(spark, sf_dir, split_log):
         .dropDuplicates(["event_id"])
         .select("event_id"),
         "append",
+        tmp_path,
     )
     n_stream = out.count()
     n_batch = (
@@ -267,13 +268,10 @@ def test_foreachbatch_upsert_accumulates_across_batches(
         .parquet(split_log)
     )
     final = str(tmp_path / "totals")
-    name = f"febt_{uuid.uuid4().hex[:10]}"
     q = (
         stream.select("event_type")
         .writeStream.foreachBatch(type_count_upsert(final))
-        .option(
-            "checkpointLocation", os.path.join("/tmp/aub_ckpt", name)
-        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -320,7 +318,7 @@ def test_run_stream_refuses_partial_results(spark, sf_dir):
 
 
 def test_stream_stream_left_multibatch_matches_oneshot(
-    spark, sf_dir, tmp_path_factory
+    spark, sf_dir, tmp_path_factory, tmp_path
 ):
     """The left-outer stream-stream join must produce the SAME result
     whether the log arrives all at once or as time-ordered micro-
@@ -386,9 +384,7 @@ def test_stream_stream_left_multibatch_matches_oneshot(
         joined.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option(
-            "checkpointLocation", os.path.join("/tmp/aub_ckpt", name)
-        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
