@@ -83,13 +83,21 @@ _STATE_WIDTH_LOCK = threading.Lock()
 
 
 class _OwnedCheckpointQuery(StreamingQuery):
-    """A query on a checkpoint :func:`start_stream` picked: stopping it
+    """A query on a checkpoint :func:`start_stream` picked: stopping it,
+    or an ``awaitTermination`` that sees it ended (returned or raised),
     also removes the checkpoint, which exists only to resume this one
     query."""
 
     def __init__(self, query: StreamingQuery, checkpoint: str) -> None:
         super().__init__(query._jsq)
         self._checkpoint = checkpoint
+
+    def awaitTermination(self, timeout: int | None = None) -> bool | None:
+        try:
+            return super().awaitTermination(timeout)
+        finally:
+            if not self.isActive:
+                shutil.rmtree(self._checkpoint, ignore_errors=True)
 
     def stop(self) -> None:
         try:
@@ -122,7 +130,8 @@ def start_stream(
 
     ``checkpoint_dir``: a caller-supplied checkpoint is where a restart
     resumes, and is never removed. Without one the query gets a fresh
-    checkpoint under the temp dir, removed when the query is stopped.
+    checkpoint under the temp dir, removed when the query is stopped or
+    ``awaitTermination`` sees it ended.
     """
     spark = stream_df.sparkSession
     checkpoint = checkpoint_dir or os.path.join(

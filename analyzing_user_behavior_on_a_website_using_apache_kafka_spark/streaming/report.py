@@ -387,7 +387,8 @@ def run_report_stream(
 
     ``checkpoint_dir``: a caller-supplied checkpoint is where a restart
     resumes. By default each call takes a fresh one under the temp dir,
-    removed when the returned query is stopped.
+    removed when the returned query is stopped or ``awaitTermination``
+    sees it ended.
     """
 
     def for_each_batch(batch_df: DataFrame, epoch_id: int) -> None:

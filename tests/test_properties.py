@@ -1526,3 +1526,93 @@ def test_salted_half_pairs_rule_exact_once(rows, cap):
     assert all(
         s_of[c] == 1 for c, m in occ.items() if m <= cap
     ), (rows, cap)
+
+
+# -- streamed report = batch rescan = Counter ---------------------------------
+# Users 1-4 with possibly-NULL demographics; clicks also come from
+# unknown ids 5-6 and include ``home``, which the report drops at ingest.
+_report_users_strategy = st.lists(
+    st.tuples(
+        st.sampled_from([None, 25, 30]),
+        st.sampled_from([None, "Gdansk", "Sopot"]),
+        st.sampled_from([None, "Kobieta", "Mężczyzna"]),
+    ),
+    min_size=4,
+    max_size=4,
+)
+_click_files_strategy = st.lists(
+    st.lists(
+        st.tuples(st.integers(1, 6), st.sampled_from(["gitlab", "kafka", "git", "home"])),
+        min_size=1,
+        max_size=6,
+    ),
+    min_size=2,
+    max_size=4,
+)
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(demographics=_report_users_strategy, files=_click_files_strategy)
+def test_streamed_report_matches_rescan_and_counter(
+    pb_spark, tmp_path, demographics, files
+):
+    """A click log split across JSON files and streamed one file per
+    epoch (AvailableNow) ends on the model of a batch rescan of the
+    whole log, and its counts are the generator's ``Counter``."""
+    import tempfile
+    from collections import Counter
+
+    from test_report_sink import _CLICKS_DDL, _USERS_DDL, _batch_model, _write_clicks
+
+    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.streaming import (
+        clickstream,
+        report,
+    )
+
+    spark = pb_spark
+    users_rows = [(uid, *d) for uid, d in enumerate(demographics, start=1)]
+    users = spark.createDataFrame(users_rows, _USERS_DDL)
+    clicks_dir = tempfile.mkdtemp(dir=tmp_path)
+    for i, clicks in enumerate(files):
+        _write_clicks(clicks_dir, i, clicks)
+    stream = (
+        spark.readStream.schema(_CLICKS_DDL)
+        .option("maxFilesPerTrigger", 1)
+        .json(clicks_dir)
+    )
+    models: list = []
+    q = report.run_report_stream(
+        clickstream.fan_out_messages(stream, users),
+        lambda model, epoch: models.append(model),
+        available_now=True,
+    )
+    assert q.awaitTermination(300) and q.exception() is None
+    assert len(models) == len(files)
+    final = models[-1]
+    assert final == _batch_model(spark, clicks_dir, users)
+
+    by_id = {row[0]: row[1:] for row in users_rows}
+    kept = [
+        (service, by_id[uid])
+        for clicks in files
+        for uid, service in clicks
+        if service != "home" and uid in by_id
+    ]
+    assert {e["service"]: e["clicks"] for e in final["overall"]} == dict(
+        Counter(service for service, _ in kept)
+    )
+    want = Counter()
+    for service, (age, city, gender) in kept:
+        for dim, value in (("age", age), ("city", city), ("gender", gender)):
+            want[service, dim, None if value is None else str(value)] += 1
+    got = {
+        (s["service"], dim, value): count
+        for s in final["services"]
+        for dim, hist in s["histograms"].items()
+        for value, count, _share in hist
+    }
+    assert got == dict(want)

@@ -88,6 +88,35 @@ def test_engine_checkpoints_are_removed_however_the_query_ends(
     assert len(_entries(tmp_path / "aub_streamsink")) == 1
 
 
+def test_report_checkpoint_is_removed_once_await_sees_the_end(
+    spark, tmp_path, monkeypatch
+):
+    """An AvailableNow report whose caller only awaits it, never stops
+    it, leaves no checkpoint: whether ``awaitTermination`` returns or
+    raises the query's failure."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    _write_clicks(tmp_path / "clicks", 0, _NULL_CLICKS)
+    users = spark.createDataFrame(_NULL_USERS, _USERS_DDL)
+
+    def run(sink):
+        stream = spark.readStream.schema(_CLICKS_DDL).json(str(tmp_path / "clicks"))
+        return report.run_report_stream(
+            clickstream.fan_out_messages(stream, users), sink, available_now=True
+        )
+
+    captured: list = []
+    assert run(lambda model, epoch: captured.append(model)).awaitTermination(300)
+    assert captured
+    assert _entries(tmp_path / "aub_ckpt") == []
+
+    def fail(model, epoch):
+        raise ValueError("sink failed")
+
+    with pytest.raises(Exception, match="sink failed"):
+        run(fail).awaitTermination(300)
+    assert _entries(tmp_path / "aub_ckpt") == []
+
+
 def test_engine_calls_leave_the_session_conf_unchanged(spark, sf_dir, tmp_path):
     """Each call sets nothing on the shared session: the state width is
     held only for a stream's start, and partition overwrite is a
