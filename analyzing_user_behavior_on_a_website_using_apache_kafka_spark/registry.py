@@ -89,101 +89,154 @@ FAMILIES: dict[str, tuple[str, ...]] = {
 # previously-failing rows sit inside a 50-entry window.  Names not listed
 # here follow in module registration order.
 _PRIORITY: tuple[str, ...] = (
-    # Round-16 window, from `python tools/propose_window.py --changed
-    # q_dedup_near,q_dedup_simhash,q_udf_cogroup,q_udaf_grouped,
-    # q_agg_approx_distinct,q_source_binaryfile`.  SIX changed keys
-    # lead. Two from the band-join salting (VERDICT r15 item 2): both
-    # band self-joins route through similarity.salted_half_pairs with
-    # cell key (band_id, band_key) and broadcast=False — plans changed
-    # at every scale, OUTPUT pair sets byte-identical (lossless split,
-    # planted-cluster equality tests; sf0.01 oracles re-verified tuned
-    # + vanilla; at sf0.1 the cap genuinely engages — SCALE.md r16).
-    # Four from the r16 OPTIMIZATION pass (OPTIMIZATION_r16.md):
-    # cogroup/udaf pandas→Arrow swaps, the approx_distinct
-    # dedup-before-sketch rewrite, and the binaryFile parallel
-    # partitioned write — each output-hash-identical and oracle-
-    # verified at sf0.001/0.01 tuned + vanilla.  Then the THREE
-    # r12-stale NEXT_WINDOW_LEADS declared in r15 (MANDATORY per the
-    # slip rule), then 41 of the 46 remaining r13-checked at-bound
-    # keys; FIVE r13 keys slip to r17 (NEXT_WINDOW_LEADS below —
-    # their families keep in-window members).
-    # Window arithmetic: 6 + 3 + 41 = 50.
+    # Round-18 window.  The rotation after r17 was missed: r17 checked
+    # the r16 window again verbatim, so the five r13 keys declared as
+    # NEXT_WINDOW_LEADS went unchecked from r14 through r17 and their
+    # one-round allowance expired.  `python tools/propose_window.py
+    # --changed q_sink_foreachbatch` then has no legal window: it warns
+    # that the mandatory keys exceed 50 and prints 51 past-bound keys
+    # (5 last checked r13, 46 last checked r14).  This window is those
+    # 51 minus q_project_derive, the key the proposer's rule-6 order
+    # gives up first (no family, then the largest name).  It reads
+    # staleness 4 after r18 (bound + 1) under the declared-slip
+    # allowance and MUST lead the r19 window (NEXT_WINDOW_LEADS below).
+    # Window arithmetic: 1 changed + 5 r13 + 44 r14 = 50.
+    # The write paths of q_sink_foreachbatch and q_sink_upsert changed
+    # after r17 (one stream start path; per-write partition overwrite).
+    # q_sink_foreachbatch (r14) leads as rule 2 asks.  q_sink_upsert was
+    # last checked r15, reads staleness 3 after r18 (within the bound),
+    # and would only fit by pushing a second r14 key past the bound, so
+    # it is declared a lead for r19 instead.
     # Standing guard:
     # tests/test_registry.py::test_rotation_remains_feasible_three_rounds_ahead.
+    # After the missed rotation it reports an r19 overflow: 100 keys
+    # were last checked r15 or earlier and q_udf_scalar is the only udf
+    # key among them, so with a udf key in every window r19 needs 51
+    # keys whichever udf key r18 holds.
     # Any key whose served plan changes must be promoted to the FRONT
     # (re-run the proposer with --changed).
-    # --- changed this round ---
-    "q_dedup_near",
-    "q_dedup_simhash",
-    "q_udf_cogroup",
-    "q_udaf_grouped",
-    "q_agg_approx_distinct",
-    "q_source_binaryfile",
-    # --- past staleness bound (last r12) ---
-    "q_union_all",
-    "q_union_distinct",
-    "q_unpivot",
-    # --- at staleness bound (last r13) ---
-    "q_agg_count_by",
-    "q_agg_grouping_sets",
-    "q_agg_having",
-    "q_agg_rollup",
-    "q_agg_sum_avg",
-    "q_array_funcs",
-    "q_cohort_retention",
-    "q_date_funcs",
-    "q_embed_normquant",
-    "q_event_attribution",
-    "q_event_dwell",
-    "q_event_transitions",
-    "q_filter_eq",
-    "q_join_anti",
-    "q_join_asof",
-    "q_join_broadcast",
-    "q_join_inner",
-    "q_join_left",
-    "q_join_multiway",
-    "q_join_salted",
-    "q_join_theta_range",
-    "q_multimodal_cols",
-    "q_sample_hash",
-    "q_sample_stratified",
-    "q_sim_pq_adc",
-    "q_sink_append",
-    "q_sink_partitioned",
-    "q_source_csv",
-    "q_source_json",
-    "q_sql_report",
-    "q_stream_complete_agg",
-    "q_text_pii_scrub",
-    "q_text_repetition",
-    "q_text_rollhash",
-    "q_text_tfidf",
-    "q_text_token_bpe",
-    "q_text_tokens",
-    "q_text_unigram_logprob",
-    "q_text_vocab",
-    "q_udf_pandas",
-    "q_win_lag_lead",
-)
-
-
-# At-bound keys the window above could NOT fit (the proposer's rule-6
-# slips): they sit at staleness exactly 3 right now and MUST lead the
-# r16 rotation.  tools/rotation_check.py grants keys listed here a
-# one-round allowance (staleness == bound+1, never more), which
-# self-expires: if the next rotation fails to happen and another
-# round's results land, staleness hits bound+2 and the check goes red
-# for real.  Maintained together with _PRIORITY — the proposer prints
-# this tuple alongside the window
-# (tests/test_registry.py::test_next_window_leads_are_genuine_slips
-# fails if a listed key is fresh, unregistered, or in-window).
-NEXT_WINDOW_LEADS: tuple[str, ...] = (
+    # --- changed since r17 ---
+    "q_sink_foreachbatch",
+    # --- past staleness bound (last r13) ---
     "q_filter_in",
     "q_filter_like",
     "q_filter_range",
     "q_funnel_conversion",
     "q_growth_accounting",
+    # --- past staleness bound (last r14) ---
+    "q_agg_distinct",
+    "q_agg_filtered",
+    "q_agg_percentile",
+    "q_agg_share",
+    "q_dedup_clusters",
+    "q_dedup_editdist",
+    "q_dedup_exact",
+    "q_dedup_ngram_jaccard",
+    "q_dedup_semantic",
+    "q_dedup_substring",
+    "q_embed_pq",
+    "q_event_anomaly",
+    "q_event_rfm",
+    "q_except",
+    "q_filter_null",
+    "q_intersect",
+    "q_join_cross",
+    "q_join_semi",
+    "q_json_funcs",
+    "q_json_variant",
+    "q_math_funcs",
+    "q_multimodal_framedup",
+    "q_pack_sequences",
+    "q_path_topk",
+    "q_pipeline_curate",
+    "q_pivot",
+    "q_sample_temperature",
+    "q_sim_ann",
+    "q_sim_ivf",
+    "q_sink_zorder",
+    "q_source_orc",
+    "q_source_xml",
+    "q_sql_join_having",
+    "q_sql_lateral",
+    "q_sql_recursive",
+    "q_stream_custom_state",
+    "q_text_langid",
+    "q_text_quality",
+    "q_udf_scalar",
+    "q_udtf_python",
+    "q_win_distribution",
+    "q_win_range_frame",
+    "q_win_rank",
+    "q_win_running",
+)
+
+
+# Keys the window above could NOT fit.  q_project_derive (last r14)
+# reads staleness 4 after r18, the bound plus one; the other 49 (last
+# r15) read 3, exactly the bound.  All of them MUST lead the r19
+# rotation, q_sink_upsert under "changed" (its write path changed after
+# r17).  tools/rotation_check.py grants keys listed here a one-round
+# allowance (staleness == bound+1, never more), which self-expires: if
+# the next rotation fails to happen and another round's results land,
+# staleness hits bound+2 and the check goes red for real, as it did for
+# the five r13 keys when the r17 rotation was missed.  Maintained
+# together with _PRIORITY — the proposer prints this tuple alongside
+# the window
+# (tests/test_registry.py::test_next_window_leads_are_genuine_slips
+# fails if a listed key is fresh, unregistered, or in-window).
+NEXT_WINDOW_LEADS: tuple[str, ...] = (
+    # --- past staleness bound (last r14) ---
+    "q_project_derive",
+    # --- at staleness bound (last r15) ---
+    "q_agg_approx_quantile",
+    "q_agg_collect",
+    "q_agg_cube",
+    "q_agg_sketch_merge",
+    "q_agg_stats",
+    "q_dedup_containment",
+    "q_dedup_embed_cosine",
+    "q_dedup_incremental",
+    "q_join_dpp",
+    "q_join_range_binned",
+    "q_map_funcs",
+    "q_multimodal_features",
+    "q_multimodal_framesample",
+    "q_profile_columns",
+    "q_sample_mixture",
+    "q_scan_project",
+    "q_sessionize_batch",
+    "q_sim_timeseries",
+    "q_sim_topk_bruteforce",
+    "q_sink_bucketed",
+    "q_sink_upsert",
+    "q_sort_limit",
+    "q_sort_multikey",
+    "q_source_evolving_schema",
+    "q_split_train_test",
+    "q_sql_window",
+    "q_str_funcs",
+    "q_stream_dedup",
+    "q_stream_kafka_source",
+    "q_stream_session",
+    "q_stream_sliding",
+    "q_stream_static_join",
+    "q_stream_stream_join",
+    "q_stream_stream_left",
+    "q_stream_tumbling",
+    "q_stream_watermark_late",
+    "q_subquery_scalar",
+    "q_text_chunk",
+    "q_text_decontaminate",
+    "q_text_entropy",
+    "q_text_fingerprint",
+    "q_text_langstats",
+    "q_text_ngram_counts",
+    "q_text_normalize",
+    "q_time_interpolate",
+    "q_time_rollup",
+    "q_topk_per_group",
+    "q_udtf_explode",
+    "q_win_first_last",
 )
 
 
