@@ -89,30 +89,15 @@ FAMILIES: dict[str, tuple[str, ...]] = {
 # previously-failing rows sit inside a 50-entry window.  Names not listed
 # here follow in module registration order.
 _PRIORITY: tuple[str, ...] = (
-    # Round-18 window.  The rotation after r17 was missed: r17 checked
-    # the r16 window again verbatim, so the five r13 keys declared as
-    # NEXT_WINDOW_LEADS went unchecked from r14 through r17 and their
-    # one-round allowance expired.  `python tools/propose_window.py
-    # --changed q_sink_foreachbatch` then has no legal window: it warns
-    # that the mandatory keys exceed 50 and prints 51 past-bound keys
-    # (5 last checked r13, 46 last checked r14).  This window is those
-    # 51 minus q_project_derive, the key the proposer's rule-6 order
-    # gives up first (no family, then the largest name).  It reads
-    # staleness 4 after r18 (bound + 1) under the declared-slip
-    # allowance and MUST lead the r19 window (NEXT_WINDOW_LEADS below).
+    # Round-18 window: the keys past the staleness bound, led by the one
+    # whose write path changed since r17 (rule 2).  51 keys were past the
+    # bound for 50 slots, so q_project_derive (the proposer's rule-6
+    # victim: no family, then the largest name) stays out and reads
+    # staleness 4 after r18, a real violation that rotation_check
+    # reports; it must lead r19.  See CHANGES.md and ROADMAP.md.
     # Window arithmetic: 1 changed + 5 r13 + 44 r14 = 50.
-    # The write paths of q_sink_foreachbatch and q_sink_upsert changed
-    # after r17 (one stream start path; per-write partition overwrite).
-    # q_sink_foreachbatch (r14) leads as rule 2 asks.  q_sink_upsert was
-    # last checked r15, reads staleness 3 after r18 (within the bound),
-    # and would only fit by pushing a second r14 key past the bound, so
-    # it is declared a lead for r19 instead.
     # Standing guard:
     # tests/test_registry.py::test_rotation_remains_feasible_three_rounds_ahead.
-    # After the missed rotation it reports an r19 overflow: 100 keys
-    # were last checked r15 or earlier and q_udf_scalar is the only udf
-    # key among them, so with a udf key in every window r19 needs 51
-    # keys whichever udf key r18 holds.
     # Any key whose served plan changes must be promoted to the FRONT
     # (re-run the proposer with --changed).
     # --- changed since r17 ---
@@ -171,22 +156,18 @@ _PRIORITY: tuple[str, ...] = (
 )
 
 
-# Keys the window above could NOT fit.  q_project_derive (last r14)
-# reads staleness 4 after r18, the bound plus one; the other 49 (last
-# r15) read 3, exactly the bound.  All of them MUST lead the r19
-# rotation, q_sink_upsert under "changed" (its write path changed after
-# r17).  tools/rotation_check.py grants keys listed here a one-round
-# allowance (staleness == bound+1, never more), which self-expires: if
-# the next rotation fails to happen and another round's results land,
-# staleness hits bound+2 and the check goes red for real, as it did for
-# the five r13 keys when the r17 rotation was missed.  Maintained
-# together with _PRIORITY — the proposer prints this tuple alongside
-# the window
+# At-bound keys the window above could NOT fit (the proposer's rule-6
+# slips): they sit at staleness exactly 3 after r18 and MUST lead the
+# r19 rotation, q_sink_upsert under "changed" (its write path changed
+# after r17).  tools/rotation_check.py grants keys listed here a
+# one-round allowance (staleness == bound+1, never more), which
+# self-expires: if the next rotation fails to happen and another
+# round's results land, staleness hits bound+2 and the check goes red
+# for real.  Maintained together with _PRIORITY — the proposer prints
+# this tuple alongside the window
 # (tests/test_registry.py::test_next_window_leads_are_genuine_slips
 # fails if a listed key is fresh, unregistered, or in-window).
 NEXT_WINDOW_LEADS: tuple[str, ...] = (
-    # --- past staleness bound (last r14) ---
-    "q_project_derive",
     # --- at staleness bound (last r15) ---
     "q_agg_approx_quantile",
     "q_agg_collect",
