@@ -4,8 +4,9 @@ The driver generates TPC-H-ish parquet at ``/root/testdata/sf*/`` (see
 TESTDATA.md / FIXTURES.md). Loaders here are the only place paths are
 spelled out; every query takes ``(spark, sf_dir)`` and pulls tables
 through :func:`load_table` so filters/projections still push down to the
-parquet scan (we return the raw ``spark.read.parquet`` DataFrame, never a
-cached/materialized copy).
+parquet scan (we return a plain parquet scan, never a cached/materialized
+copy). A table's schema is inferred once per session and file identity
+and then passed to the reader, so a repeated load runs no Spark job.
 
 At 100 TB the same loader maps to partitioned/bucketed external tables:
 the API surface (name -> DataFrame) is unchanged; only the storage layout
@@ -15,6 +16,7 @@ option strings differ.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,12 +101,77 @@ def ensure_reader_conf(spark: SparkSession, name: str) -> None:
                 pass
 
 
+# session -> {(path identity, reader confs) -> inferred schema}. Without
+# a schema, spark.read.parquet runs a one-task schema-inference job
+# (~70 ms) on every call. The key holds the two reader confs that
+# ensure_reader_conf sets, since they change what a timestamp column
+# infers as. Plain StructTypes, so evict_caches does not clear this
+# either (see _ROW_COUNT_CACHE).
+_SCHEMA_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Raw parquet scan for one fixture table (lazy; pushdown-friendly)."""
+    """Parquet scan for one fixture table (lazy; pushdown-friendly).
+
+    The first load of a file identity (:func:`file_identity`) in a
+    session infers the schema; later loads pass it to the reader and run
+    no Spark job. A path with no local identity always infers.
+    """
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; known: {TABLES}")
     ensure_reader_conf(spark, name)
-    return normalize(name, spark.read.parquet(table_path(sf_dir, name)))
+    path = table_path(sf_dir, name)
+    ident = file_identity(path)
+    if not ident:
+        return normalize(name, spark.read.parquet(path))
+    key = (ident, *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    schemas = _SCHEMA_CACHE.setdefault(spark, {})
+    if key not in schemas:
+        df = spark.read.parquet(path)
+        schemas[key] = df.schema
+        return normalize(name, df)
+    return normalize(name, spark.read.schema(schemas[key]).parquet(path))
+
+
+def file_identity(path: str) -> tuple:
+    """``(abspath, size, mtime_ns)`` of every file Spark's scan of
+    ``path`` reads, sorted; ``()`` when none can be stat'ed locally.
+
+    A file or directory REGENERATED at the same path (TESTDATA.md: same
+    paths every round) gets a new identity, so no memo keyed on it can
+    serve stale facts. Directory layouts skip the paths Spark's scan
+    skips (any component starting with '_' or '.': _temporary job
+    attempts, _SUCCESS markers, hidden files).
+    """
+
+    def _hidden(p: str) -> bool:
+        return p.startswith("_") or p.startswith(".")
+
+    files = []
+    if os.path.isdir(path):
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            # every non-hidden file, not just *.parquet: Spark's scan
+            # reads extension-less part files too, and skipping them
+            # would size table_rows' geometry for a smaller corpus than
+            # the plan scans.
+            files.extend(
+                os.path.join(root, f) for f in names if not _hidden(f)
+            )
+    elif os.path.exists(path):
+        files.append(path)
+    try:
+        return tuple(
+            (os.path.abspath(f), st.st_size, st.st_mtime_ns)
+            for f in sorted(files)
+            for st in (os.stat(f),)
+        )
+    except OSError:
+        return ()
 
 
 # (path identity) -> row count. Keyed by (abspath, size, mtime_ns) per
@@ -128,52 +195,26 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     double-charges any tool that constructs the plan twice (ADVICE
     r12). Parquet footers carry exact row counts, so this is a local
     metadata read — the same information a cluster catalog serves from
-    table statistics. Directory layouts skip the paths Spark's scan
-    skips (any component starting with '_' or '.': _temporary job
-    attempts, _SUCCESS markers, hidden files), so the footer count
-    matches the scan count even on a layout a crashed write left
-    behind. Falls back to a Spark count() when the path is not
-    footer-readable (e.g. object storage without a local pyarrow
-    filesystem) — that branch is deliberately UNCACHED (no stat-based
-    identity exists to invalidate on), so non-local callers pay an
-    eager count per construction; at cluster scale the real answer is
-    catalog/table statistics, not this helper.
+    table statistics. The files summed are :func:`file_identity`'s,
+    the ones Spark's scan reads, so the footer count matches the scan
+    count even on a layout a crashed write left behind. Falls back to a
+    Spark count() when the path is not footer-readable (e.g. object
+    storage without a local pyarrow filesystem) — that branch is
+    deliberately UNCACHED (no stat-based identity exists to invalidate
+    on), so non-local callers pay an eager count per construction; at
+    cluster scale the real answer is catalog/table statistics, not this
+    helper. A non-parquet stray in a directory makes pyarrow raise →
+    the same count() fallback, the behavior the scan's own error path
+    gives.
     """
-    path = table_path(sf_dir, name)
-
-    def _hidden(p: str) -> bool:
-        return p.startswith("_") or p.startswith(".")
-
-    files = []
-    if os.path.isdir(path):
-        for root, dirs, names in os.walk(path):
-            dirs[:] = [d for d in dirs if not _hidden(d)]
-            # every non-hidden file, not just *.parquet: Spark's scan
-            # reads extension-less part files too, and skipping them
-            # here would size the geometry for a smaller corpus than
-            # the plan scans (r13 review). A non-parquet stray makes
-            # pyarrow raise below → honest count() fallback, the same
-            # behavior the scan's own error path gives.
-            files.extend(
-                os.path.join(root, f) for f in names if not _hidden(f)
-            )
-    elif os.path.exists(path):
-        files.append(path)
-    try:
-        ident = tuple(
-            (os.path.abspath(f), st.st_size, st.st_mtime_ns)
-            for f in sorted(files)
-            for st in (os.stat(f),)
-        )
-    except OSError:
-        ident = ()
+    ident = file_identity(table_path(sf_dir, name))
     if not ident:  # not a local path — lazy-count fallback, uncached
         return load_table(spark, sf_dir, name).count()
     if ident not in _ROW_COUNT_CACHE:
         try:
             import pyarrow.parquet as pq
 
-            n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+            n = sum(pq.ParquetFile(f).metadata.num_rows for f, _, _ in ident)
         except Exception:
             n = load_table(spark, sf_dir, name).count()
         _ROW_COUNT_CACHE[ident] = n

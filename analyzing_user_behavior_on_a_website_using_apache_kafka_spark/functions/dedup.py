@@ -235,21 +235,29 @@ def minhash_banded(sigs: DataFrame) -> DataFrame:
             for band in range(_N_BANDS)
         ],
     )
-    bk_cols = [f"bk_{band}" for band in range(_N_BANDS)]
-    bands = []
-    for band in range(_N_BANDS):
-        bands.append(
-            keyed.select(
-                "doc_id",
-                *bk_cols,
-                F.lit(band).alias("band_id"),
-                F.col(f"bk_{band}").alias("band_key"),
+    return _band_rows(keyed, [f"bk_{band}" for band in range(_N_BANDS)])
+
+
+def _band_rows(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
+    """(doc_id, *key_cols) → one row per (doc, band) carrying
+    (doc_id, *key_cols, band_id, band_key), band j's key = key_cols[j].
+
+    One generator pass over ``keyed``: a per-band ``unionByName`` would
+    scan it once per band."""
+    return keyed.select(
+        "doc_id",
+        *key_cols,
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("band_id"), F.col(c).alias("band_key")
+                    )
+                    for j, c in enumerate(key_cols)
+                ]
             )
-        )
-    banded = bands[0]
-    for b in bands[1:]:
-        banded = banded.unionByName(b)
-    return banded
+        ),
+    )
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,11 +303,12 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration split six ways): the benched plan runs the hot path
     for real, at ~+0.6 s over the unsalted join.
     """
-    # PERSIST the signature table: it feeds 8 band projections, BOTH
-    # sides of the bucket self-join, and the two signature re-attach
+    # PERSIST the signature table: it feeds the band table on BOTH
+    # sides of the bucket self-join and the two signature re-attach
     # joins — and the higher-order-lambda minhash lineage defeats
     # Spark's exchange reuse (see prefix_filtered_jaccard_join), so
-    # unpersisted the corpus is re-tokenized and re-permuted ~18×.
+    # unpersisted the corpus is re-tokenized and re-permuted once per
+    # consumer.
     # 32 longs + doc_id ≈ 260 B/doc; a production pipeline stages this
     # exact table to storage. MEMORY_AND_DISK: spill, don't OOM.
     from pyspark import StorageLevel
@@ -1395,21 +1404,7 @@ def simhash_banded(sigs: DataFrame) -> DataFrame:
     word itself. Factored out of simhash_band_pairs (r16) so the
     salting tests and the band-space candidate audit build the EXACT
     production cell space instead of re-deriving it."""
-    sig_cols = [f"sh{j}" for j in range(_SIMHASH_BANDS)]
-    bands = []
-    for j in range(_SIMHASH_BANDS):
-        bands.append(
-            sigs.select(
-                "doc_id",
-                *sig_cols,
-                F.lit(j).alias("band_id"),
-                F.col(f"sh{j}").alias("band_key"),
-            )
-        )
-    banded = bands[0]
-    for b in bands[1:]:
-        banded = banded.unionByName(b)
-    return banded
+    return _band_rows(sigs, [f"sh{j}" for j in range(_SIMHASH_BANDS)])
 
 
 def simhash_band_pairs(
@@ -1433,10 +1428,9 @@ def simhash_band_pairs(
     arithmetic). Completeness is property-tested against a Python
     all-pairs hamming scan at BOTH widths (tests/test_northstar.py).
 
-    The signature table is PERSISTED (landed r7, with q_dedup_simhash
-    in the driver window): it feeds 4 band projections × both self-join
-    sides = 8 subtree copies, so unpersisted the Arrow-batched
-    sign-sum UDF recomputes ~8× (20 parquet scans audited at r6 end).
+    The signature table is PERSISTED: it feeds the band table on both
+    self-join sides, and unpersisted the Arrow-batched sign-sum UDF
+    reruns for each.
     One slim (doc_id, 4×bigint) row per doc — MEMORY_AND_DISK spills,
     never OOMs. Session-lifetime cache by design (_CACHE_OWNERSHIP,
     module top).

@@ -392,12 +392,17 @@ def _coeff_matrix(dim: int):
 
     Planes ≥ _N_PLANES are Gram-Schmidt ORTHOGONALIZED within their
     table against every earlier plane, with the projection dot
-    products computed as ORDER-FIXED sequential Python-float sums
+    products computed as ORDER-FIXED sequential sums (a running
+    ``np.add.accumulate`` down the dim axis, every table at once)
     rather than numpy/BLAS reductions — BLAS reduction order varies by
     build (MKL vs OpenBLAS, SIMD width), and the pre-r14 matrix was
     build-independent by construction (pure scalar _plane_coeff), an
     invariant the self-join's two sides rely on for identical bucket
-    ids; the one-time cost is ~10⁶ scalar ops per process. Why
+    ids. The integer mix and every float op match the scalar
+    `_plane_coeff` and a sequential Python-float Gram-Schmidt bit for
+    bit (tests/test_fixed_cost.py); vectorized, the build takes
+    milliseconds, so the per-task rebuild (the module is pickled by
+    value, so this cache reaches each task empty) is cheap. Why
     orthogonalize at all: the
     r13 candidate audit measured bucket-occupancy skew
     E[occ²]/E[occ]² ≈ 1.36–1.48 drifting UP with code width, and r14
@@ -423,28 +428,33 @@ def _coeff_matrix(dim: int):
     import numpy as np
 
     if dim not in _COEFF_CACHE:
-        m = np.empty((dim, _MAX_TABLES * _MAX_PLANES), dtype=np.float64)
-        for t in range(_MAX_TABLES):
-            for p in range(_MAX_PLANES):
-                for d in range(dim):
-                    m[d, t * _MAX_PLANES + p] = _plane_coeff(t, p, d)
-        def dot(a, b):  # order-fixed sequential sum — build-independent
-            acc = 0.0
-            for i in range(dim):
-                acc += float(a[i]) * float(b[i])
-            return acc
+        # _plane_coeff for every (d, t, p) at once: x < 2³² at every
+        # step, so each product fits uint64 and the masks are exact
+        u64 = np.uint64
+        low32 = u64(0xFFFFFFFF)
+        x = (
+            np.arange(_MAX_TABLES, dtype=u64)[None, :, None] * u64(1_000_003)
+            + np.arange(_MAX_PLANES, dtype=u64)[None, None, :] * u64(7919)
+            + np.arange(dim, dtype=u64)[:, None, None] * u64(104_729)
+            + u64(0x9E3779B9)
+        ) & low32
+        x = ((x ^ (x >> u64(16))) * u64(0x85EBCA6B)) & low32
+        x = ((x ^ (x >> u64(13))) * u64(0xC2B2AE35)) & low32
+        x ^= x >> u64(16)
+        m = x.astype(np.float64) / 2**31 - 1.0  # (dim, table, plane)
+        zero = np.zeros((1, _MAX_TABLES))
 
-        for t in range(_MAX_TABLES):
-            base = t * _MAX_PLANES
-            for p in range(_N_PLANES, min(_MAX_PLANES, dim)):
-                v = [float(x) for x in m[:, base + p]]
-                for q in range(p):
-                    u = m[:, base + q]
-                    coeff = dot(v, u) / dot(u, u)
-                    for i in range(dim):
-                        v[i] -= coeff * float(u[i])
-                if dot(v, v) > 1e-18:  # never expected to fail
-                    m[:, base + p] = v
+        def dot(a, b):  # per-table sums, sequential over dim from 0.0
+            return np.add.accumulate(np.vstack([zero, a * b]), axis=0)[-1]
+
+        for p in range(_N_PLANES, min(_MAX_PLANES, dim)):
+            v = m[:, :, p].copy()
+            for q in range(p):
+                u = m[:, :, q]
+                v -= (dot(v, u) / dot(u, u)) * u
+            keep = dot(v, v) > 1e-18  # never expected to fail
+            m[:, keep, p] = v[:, keep]
+        m = m.reshape(dim, _MAX_TABLES * _MAX_PLANES)
         _COEFF_CACHE[dim] = m
     return _COEFF_CACHE[dim]
 

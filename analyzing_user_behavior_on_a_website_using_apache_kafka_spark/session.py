@@ -11,9 +11,16 @@ Settings are chosen for correctness-at-scale first:
   a high initial number).
 - Arrow enabled: every Pandas-UDF / toPandas boundary is vectorized.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- PySpark's per-call call-site capture off: building a plan makes
+  thousands of DataFrame/Column calls, and each one otherwise pays
+  extra JVM round trips. An error keeps its class and message but no
+  longer names the Python line in its DataFrame query context.
 
 A new driver JVM maps a class-data-sharing archive kept in the checkout
 (``CDS_DIR``), which the first launch records: start-up is ~45% shorter.
+A JVM that crashes on the archive writes its ``hs_err_pid<N>.log`` into
+``CDS_DIR``, never the caller's working directory, and the relaunch
+removes it with the archive.
 """
 
 from __future__ import annotations
@@ -115,6 +122,9 @@ def _tuned_builder(app_name: str, cpus: int) -> SparkSession.Builder:
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or DEFAULT_DRIVER_MEM,
         )
         .config("spark.ui.enabled", "false")
+        # call-site capture (module docstring): PySpark reads this once
+        # per process, at the first DataFrame/Column call with a session
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         # bucketed saveAsTable targets (co-located join tests) land in /tmp
         .config(
@@ -153,6 +163,8 @@ def get_spark(
         spark = _launch(app_name, cpus, extra_conf, "off", "")
         if mode == "mapped":
             _unlink(path)  # a plain start worked: the archive stopped the JVM
+        for log in glob.glob(_crash_log(path).replace("%p", "*")):
+            _unlink(log)
         mode = "off"
     if mode == "recording":
         # The lock now names the JVM, which writes the archive at its exit,
@@ -176,7 +188,9 @@ def _launch(
     flag = "SharedArchiveFile" if mode == "mapped" else "ArchiveClassesAtExit"
     # Recording prints ~650 "[warning][cds] Skipping ...: Signed JAR" lines
     # to the JVM's stdout; a rejected archive falls back to a plain start.
-    opts = f"-XX:{flag}={path} -Xlog:cds*=off"
+    opts = (
+        f"-XX:{flag}={path} -XX:ErrorFile={_crash_log(path)} -Xlog:cds*=off"
+    )
     own = extra_conf.get("spark.driver.defaultJavaOptions")
     builder = builder.config(
         "spark.driver.defaultJavaOptions", f"{opts} {own}" if own else opts
@@ -362,6 +376,12 @@ def _write_owner(lock: str, pid: int) -> None:
     with open(tmp, "w") as f:
         f.write(str(pid))
     os.replace(tmp, lock)
+
+
+def _crash_log(path: str) -> str:
+    """HotSpot's ``ErrorFile`` for a JVM launched on archive ``path``
+    (``%p`` is the JVM's pid)."""
+    return os.path.join(os.path.dirname(path), "hs_err_pid%p.log")
 
 
 def _lock_path(part: str) -> str:

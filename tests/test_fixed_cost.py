@@ -1,0 +1,174 @@
+"""Per-op fixed costs that every query pays before its first row:
+schema inference on a table load, the band tables of the two LSH
+dedup operators, and the LSH coefficient-matrix build. Each cut must
+leave the output exactly as it was."""
+
+from __future__ import annotations
+
+import time
+import uuid
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import functions as F
+
+from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.catalog import (
+    load_table,
+)
+from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions import (
+    dedup,
+    similarity,
+)
+
+
+def _jobs_in_group(spark, action) -> list[int]:
+    """Ids of the Spark jobs ``action()`` runs, read from the status
+    tracker through a job group. The tracker is fed asynchronously, so
+    a marker job in a second group is awaited first: once it shows,
+    every earlier job has been recorded."""
+    sc = spark.sparkContext
+    group, marker = f"g_{uuid.uuid4().hex}", f"m_{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "measured")
+        action()
+        sc.setJobGroup(marker, "marker")
+        spark.range(1).count()
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup(marker):
+            assert time.monotonic() < deadline, "marker job never recorded"
+            time.sleep(0.05)
+        return sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_second_table_load_runs_no_spark_job(spark, tmp_path):
+    """The first load of a file infers its schema in a Spark job; a
+    second load of the same file reuses that schema and runs none."""
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}),
+        tmp_path / "region.parquet",
+    )
+
+    def load():
+        return load_table(spark, str(tmp_path), "region")
+
+    assert _jobs_in_group(spark, load), "the first load infers in a job"
+    assert _jobs_in_group(spark, load) == []
+    assert load().count() == 2
+
+
+def test_table_rewritten_with_an_extra_column_reads_its_new_schema(
+    spark, tmp_path
+):
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == [
+        "r_regionkey"
+    ]
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1, 2], "r_comment": ["x", "y", "z"]}),
+        path,
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_comment"]
+    assert sorted(map(tuple, df.collect())) == [(0, "x"), (1, "y"), (2, "z")]
+
+
+def _union_banded(keyed, key_cols):
+    """The per-band ``unionByName`` form the band tables were built as."""
+    bands = [
+        keyed.select(
+            "doc_id",
+            *key_cols,
+            F.lit(j).alias("band_id"),
+            F.col(c).alias("band_key"),
+        )
+        for j, c in enumerate(key_cols)
+    ]
+    out = bands[0]
+    for b in bands[1:]:
+        out = out.unionByName(b)
+    return out
+
+
+def test_band_tables_equal_the_union_form(spark, sf_dir):
+    mh_sigs = dedup.minhash_signatures(spark, sf_dir)
+    rows = dedup._N_HASHES // dedup._N_BANDS
+    mh_keyed = mh_sigs.select(
+        "doc_id",
+        *[
+            F.xxhash64(
+                *[f"mh_{i}" for i in range(b * rows, (b + 1) * rows)]
+            ).alias(f"bk_{b}")
+            for b in range(dedup._N_BANDS)
+        ],
+    )
+    sh_sigs = dedup.simhash_fingerprints(spark, sf_dir)
+    for got, want in (
+        (
+            dedup.minhash_banded(mh_sigs),
+            _union_banded(
+                mh_keyed, [f"bk_{b}" for b in range(dedup._N_BANDS)]
+            ),
+        ),
+        (
+            dedup.simhash_banded(sh_sigs),
+            _union_banded(
+                sh_sigs, [f"sh{j}" for j in range(dedup._SIMHASH_BANDS)]
+            ),
+        ),
+    ):
+        assert got.schema == want.schema
+        got_rows = sorted(map(tuple, got.collect()))
+        assert got_rows == sorted(map(tuple, want.collect()))
+        assert len(got_rows) > 0
+
+
+def _scalar_coeff_matrix(dim: int) -> np.ndarray:
+    """The coefficient matrix built one scalar at a time: `_plane_coeff`
+    per entry, then Gram-Schmidt with sequential Python-float sums."""
+    T, P = similarity._MAX_TABLES, similarity._MAX_PLANES
+    N = similarity._N_PLANES
+    m = np.empty((dim, T * P), dtype=np.float64)
+    for t in range(T):
+        for p in range(P):
+            for d in range(dim):
+                m[d, t * P + p] = similarity._plane_coeff(t, p, d)
+
+    def dot(a, b):
+        acc = 0.0
+        for i in range(dim):
+            acc += float(a[i]) * float(b[i])
+        return acc
+
+    for t in range(T):
+        base = t * P
+        for p in range(N, min(P, dim)):
+            v = [float(x) for x in m[:, base + p]]
+            for q in range(p):
+                u = m[:, base + q]
+                coeff = dot(v, u) / dot(u, u)
+                for i in range(dim):
+                    v[i] -= coeff * float(u[i])
+            if dot(v, v) > 1e-18:
+                m[:, base + p] = v
+    return m
+
+
+def test_coeff_matrix_is_bit_identical_to_the_scalar_build(monkeypatch):
+    monkeypatch.setattr(similarity, "_COEFF_CACHE", {})
+    for dim in (3, 8, 17, 64):
+        got = similarity._coeff_matrix(dim)
+        assert got.shape == (
+            dim, similarity._MAX_TABLES * similarity._MAX_PLANES
+        )
+        assert got.tobytes() == _scalar_coeff_matrix(dim).tobytes(), dim
+
+
+def test_call_site_capture_is_off(spark):
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"

@@ -151,7 +151,8 @@ def test_template_only_conf_dir_gives_the_cds_flags(tmp_path, monkeypatch):
     assert mode == "recording"
     options, launch_conf_dir = _launch_options(monkeypatch, mode, part, {})
     assert options["spark.driver.defaultJavaOptions"] == (
-        f"-XX:ArchiveClassesAtExit={part} -Xlog:cds*=off"
+        f"-XX:ArchiveClassesAtExit={part} "
+        f"-XX:ErrorFile={cds}/hs_err_pid%p.log -Xlog:cds*=off"
     )
     assert launch_conf_dir == os.path.join(cds, "conf")
     assert os.listdir(launch_conf_dir) == []
@@ -177,7 +178,9 @@ def test_caller_default_java_options_are_kept(tmp_path, monkeypatch):
         {"spark.driver.defaultJavaOptions": "-Dcaller.flag=1 -Xss4m"},
     )
     assert options["spark.driver.defaultJavaOptions"] == (
-        f"-XX:SharedArchiveFile={archive} -Xlog:cds*=off -Dcaller.flag=1 -Xss4m"
+        f"-XX:SharedArchiveFile={archive} "
+        f"-XX:ErrorFile={tmp_path}/cds/hs_err_pid%p.log -Xlog:cds*=off "
+        "-Dcaller.flag=1 -Xss4m"
     )
 
 
@@ -232,6 +235,7 @@ def test_session_starts_on_a_corrupt_archive(tmp_path, content):
         cwd=tmp_path, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+    assert not list(tmp_path.glob("hs_err_pid*.log"))  # none in the cwd
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert out["total"] == 499500
     assert out["probe"] == "1"
@@ -251,12 +255,13 @@ def test_a_jvm_that_dies_on_its_cds_flags_is_relaunched_without(
 ):
     """A JVM that exits before handing over its port (a damaged archive
     can crash it) is launched once more, plainly. The archive it died on
-    is removed; a recording gives its lock back."""
+    and its crash log are removed; a recording gives its lock back."""
     from pyspark import SparkContext
     from pyspark.errors import PySparkRuntimeError
 
     path = _write(tmp_path / ("k.jsa" if mode == "mapped" else "k.aa.part"), b"x")
     lock = _write(tmp_path / "k.lock", str(os.getpid()).encode())
+    crash_log = _write(tmp_path / "hs_err_pid4242.log", b"SIGBUS")
     fake = SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
     launches = []
 
@@ -273,6 +278,7 @@ def test_a_jvm_that_dies_on_its_cds_flags_is_relaunched_without(
     monkeypatch.setattr(session, "_launch", launch)
     assert session.get_spark("t", cpus=2) is fake
     assert launches == [mode, "off"]
+    assert not os.path.exists(crash_log)
     if mode == "mapped":
         assert not os.path.exists(path) and os.path.exists(lock)
     else:

@@ -5,8 +5,6 @@ against the batch ground truth on the same fixture."""
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 import pytest
 
@@ -28,14 +26,11 @@ from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.streaming.sta
 
 
 @pytest.fixture(scope="module")
-def agg_checkpoint(spark, sf_dir):
+def agg_checkpoint(spark, sf_dir, tmp_path_factory):
     """A finished complete-mode tumbling aggregate with its checkpoint
     RETAINED (run_stream deletes checkpoints after success, so this
     builds its own writer — retention is the point here)."""
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "aub_ckpt",
-        f"inspect_{uuid.uuid4().hex[:10]}",
-    )
+    ckpt = str(tmp_path_factory.mktemp("inspect") / "ckpt")
     agg = (
         stream_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 day"), "event_type")
@@ -91,21 +86,19 @@ def test_state_readable_at_explicit_batch_version(spark, agg_checkpoint):
     assert pinned.count() == latest.count()
 
 
-def _run_click_purchase_join(spark, sf_dir, delay: str) -> str:
+def _run_click_purchase_join(spark, sf_dir, delay: str, tmp_path) -> str:
     """The SHARED click→purchase join plan
     (streaming.jobs.click_purchase_join_plan — the exact plan
     q_stream_stream_join serves) run through the standard run_stream
-    harness with a caller-owned, RETAINED checkpoint; returns the
-    checkpoint path. `delay` is the watermark delay on both sides —
-    the knob that decides how much join state survives."""
+    harness with a caller-owned, RETAINED checkpoint under
+    ``tmp_path``; returns the checkpoint path. `delay` is the watermark
+    delay on both sides — the knob that decides how much join state
+    survives."""
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.streaming.jobs import (
         click_purchase_join_plan,
     )
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "aub_ckpt",
-        f"inspect_ssj_{uuid.uuid4().hex[:10]}",
-    )
+    ckpt = str(tmp_path / "ckpt")
     run_stream(
         click_purchase_join_plan(spark, sf_dir, delay),
         "append",
@@ -114,7 +107,7 @@ def _run_click_purchase_join(spark, sf_dir, delay: str) -> str:
     return ckpt
 
 
-def test_stream_stream_join_state_attributes_growth(spark, sf_dir):
+def test_stream_stream_join_state_attributes_growth(spark, sf_dir, tmp_path):
     """The 100 TB state pathology q_stream_stream_join's docstring
     promises to diagnose — a join key accumulating unbounded matches —
     read directly from BOTH sides' stores and attributed to the hot
@@ -127,7 +120,7 @@ def test_stream_stream_join_state_attributes_growth(spark, sf_dir):
     keyToNumValues is the per-key match-count index consistent with
     it, and the hottest join key in the store IS the batch-side
     most-active user — the answer to 'which key is growing my state'."""
-    ckpt = _run_click_purchase_join(spark, sf_dir, "90 days")
+    ckpt = _run_click_purchase_join(spark, sf_dir, "90 days", tmp_path)
     meta = state_metadata(spark, ckpt).collect()
     assert {m.operatorName for m in meta} == {"symmetricHashJoin"}
     assert {m.stateStoreName for m in meta} == {
@@ -168,7 +161,7 @@ def test_stream_stream_join_state_attributes_growth(spark, sf_dir):
     assert len(got) > 50  # the pathology is non-vacuous on the fixture
 
 
-def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir):
+def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir, tmp_path):
     """The inverse claim — the one that makes streaming joins viable at
     100 TB: with a real watermark delay, retained state is bounded by
     (rate × horizon), NOT stream length. With 1-hour delays the final
@@ -182,7 +175,7 @@ def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir):
     bounded-state claim, measured)."""
     import datetime
 
-    ckpt = _run_click_purchase_join(spark, sf_dir, "1 hour")
+    ckpt = _run_click_purchase_join(spark, sf_dir, "1 hour", tmp_path)
     ev = load_table(spark, sf_dir, "events")
     agg = ev.agg(
         F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias(
@@ -227,7 +220,7 @@ def test_stream_stream_join_state_is_watermark_bounded(spark, sf_dir):
     assert len(got_right) < len(purch) / 5
 
 
-def test_session_window_state_one_row_per_session(spark, sf_dir):
+def test_session_window_state_one_row_per_session(spark, sf_dir, tmp_path):
     """The state-heavy operator this engine actually worries about:
     session windows hold one state row PER (user, session) — exactly
     the O(users × sessions) footprint that made the old driver-side
@@ -236,10 +229,7 @@ def test_session_window_state_one_row_per_session(spark, sf_dir):
     same session count, same per-session event counts. This is the
     production diagnosis path for 'why is this job's RocksDB growing'
     — the answer is countable sessions, not a black box."""
-    ckpt = os.path.join(
-        tempfile.gettempdir(), "aub_ckpt",
-        f"inspect_sess_{uuid.uuid4().hex[:10]}",
-    )
+    ckpt = str(tmp_path / "ckpt")
     agg = (
         stream_table(spark, sf_dir, "events")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
@@ -267,7 +257,7 @@ def test_session_window_state_one_row_per_session(spark, sf_dir):
     assert len(got) > 100  # the fixture really is multi-session
 
 
-def test_state_diff_attributes_growth_between_batches(spark, sf_dir):
+def test_state_diff_attributes_growth_between_batches(spark, sf_dir, tmp_path):
     """state_diff — the module docstring's 'diff two batch versions for
     growth attribution' as a real operation. A two-file source with
     maxFilesPerTrigger=1 forces two micro-batches of a complete-mode
@@ -277,9 +267,8 @@ def test_state_diff_attributes_growth_between_batches(spark, sf_dir):
     classifies exactly the keys whose counts changed (updated) or that
     first appeared in the second batch (added), with the correct
     before/after values, and (c) unchanged keys are absent."""
-    name = f"inspect_diff_{uuid.uuid4().hex[:10]}"
-    src = os.path.join(tempfile.gettempdir(), "aub_diffsrc", name)
-    ckpt = os.path.join(tempfile.gettempdir(), "aub_ckpt", name)
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type"
     )
