@@ -1,20 +1,23 @@
 """SparkSession construction.
 
-One tuned builder for every entry point (tests, bench, driver verify).
-Settings are chosen for correctness-at-scale first:
+One tuned builder for every entry point (tests, bench, driver verify):
 
-- AQE on (runtime coalesce, skew-join splitting) — at 100 TB the static
-  shuffle-partition count is always wrong for at least one stage; AQE
-  re-plans from actual map-output sizes.
-- shuffle.partitions defaults to the local core count for the test rig;
-  on a real cluster this is overridden (or left to AQE's coalescing from
-  a high initial number).
+- AQE on: shuffle widths are coalesced and skewed joins split from the
+  map outputs a stage actually wrote.
+- shuffle.partitions is the local core count.
 - Arrow enabled: every Pandas-UDF / toPandas boundary is vectorized.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - PySpark's per-call call-site capture off: building a plan makes
   thousands of DataFrame/Column calls, and each one otherwise pays
   extra JVM round trips. An error keeps its class and message but no
   longer names the Python line in its DataFrame query context.
+- A codegen cache that holds a long-lived session's working set of
+  generated classes (``CODEGEN_CACHE_ENTRIES``). One ``query_mix`` pass
+  needs ~345 distinct classes. Spark's default cache of 100 entries
+  evicts them within the pass, so each warm pass would compile ~390
+  classes again: the compile time, and a JIT that starts again from the
+  interpreter on every new class. :func:`codegen_compilations` reads
+  the JVM's compile count.
 
 A new driver JVM maps a class-data-sharing archive kept in the checkout
 (``CDS_DIR``), which the first launch records: start-up is ~45% shorter.
@@ -47,6 +50,14 @@ DEFAULT_CPUS = int(
 DEFAULT_DRIVER_MEM = (
     f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // 2**22}m"
 )
+
+# Generated classes the JVM-wide codegen cache keeps (Spark's default is
+# 100). Classes compiled in one session: 345 in a cold `query_mix` pass
+# (perfbench data, seed 1, 4 cores), after which its warm passes compile
+# 8, 0, 0 with this cache; 1,554 for all 150 queries with an unbounded
+# cache (tools/check_oracle.py, sf0.01). 2,000 holds both, `query_mix`
+# with ~5.8x headroom.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def _tuned_builder(app_name: str, cpus: int) -> SparkSession.Builder:
@@ -84,7 +95,7 @@ def _tuned_builder(app_name: str, cpus: int) -> SparkSession.Builder:
         # gives every scan ONE task on local[32]. 4 MB splits keep all
         # cores busy (measured ~2x on scan-bound queries). LOCAL-RIG
         # value: on a cluster use 128-512 MB (SCALE.md §Scans) via this
-        # env var — task-per-4MB at 100 TB would be 25M tasks.
+        # env var.
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
@@ -125,6 +136,11 @@ def _tuned_builder(app_name: str, cpus: int) -> SparkSession.Builder:
         # call-site capture (module docstring): PySpark reads this once
         # per process, at the first DataFrame/Column call with a session
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # codegen cache (module docstring): a static conf, read once per
+        # JVM, so it only takes effect on the launch that starts the JVM
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
         .config("spark.sql.shuffle.spill.compress", "true")
         # bucketed saveAsTable targets (co-located join tests) land in /tmp
         .config(
@@ -175,6 +191,15 @@ def get_spark(
         _unlink(path)  # the JVM rejected it: the next launch records anew
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """How many generated classes the session's JVM has compiled so far
+    (Spark's ``CodegenMetrics`` compilation-time histogram count). The
+    difference around a call is the number of classes that call
+    compiled: 0 on a warm re-run whose classes are still in the cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return int(metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def _launch(
@@ -232,8 +257,8 @@ def cds_plan(cds_dir: str, extra_conf: dict[str, str]) -> tuple[str, str]:
         )
         if not _conf_is_templates(conf_dir):
             return "off", ""
-        key = launch_key(extra_conf)
         os.makedirs(os.path.join(cds_dir, "conf"), exist_ok=True)
+        key = launch_key(extra_conf, cds_dir)
         archive = settle_archive(cds_dir, key)
         if archive:
             return "mapped", archive
@@ -266,14 +291,21 @@ def cds_mode(spark: SparkSession) -> tuple[str, str | None]:
     return "off", None
 
 
-def launch_key(extra_conf: dict[str, str]) -> str:
-    """:func:`cds_key` of the JVM :func:`get_spark` would launch."""
+def launch_key(extra_conf: dict[str, str], cds_dir: str) -> str:
+    """The archive key of the JVM :func:`get_spark` would launch on
+    ``cds_dir``: its :func:`cds_key` and the real path of the conf dir
+    ``<cds_dir>/conf``. The launcher puts that dir on the classpath, and
+    a JVM rejects an archive recorded under another classpath, so a
+    checkout copied with its cache records a new archive at once instead
+    of first mapping the copied one in vain."""
     heap = (
         extra_conf.get("spark.driver.memory")
         or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
         or DEFAULT_DRIVER_MEM
     )
-    return cds_key(_find_spark_home(), _java_binary(), _compressed_oops(heap))
+    key = cds_key(_find_spark_home(), _java_binary(), _compressed_oops(heap))
+    conf_dir = os.path.realpath(os.path.join(cds_dir, "conf"))
+    return hashlib.sha256(f"{key}\0{conf_dir}".encode()).hexdigest()[:16]
 
 
 def cds_key(spark_home: str, java: str, compressed_oops: bool) -> str:

@@ -23,10 +23,10 @@ def _ts(**kw) -> dt.datetime:
     return _T0 + dt.timedelta(**kw)
 
 
-def _events_dir(spark, rows) -> str:
+def _events_dir(spark, base, rows) -> str:
     """Write (event_id, ts, user_id, event_type) rows as an events.parquet
-    fixture dir consumable by load_table."""
-    d = tempfile.mkdtemp(prefix="behavior_fixture_")
+    fixture dir, a new one under ``base``, consumable by load_table."""
+    d = tempfile.mkdtemp(prefix="behavior_fixture_", dir=base)
     df = spark.createDataFrame(
         [(i, ts, uid, et, 1.0, "{}") for i, (ts, uid, et) in enumerate(rows)],
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -39,7 +39,7 @@ def _events_dir(spark, rows) -> str:
 
 
 @pytest.fixture(scope="module")
-def funnel_dir(spark):
+def funnel_dir(spark, tmp_path_factory):
     rows = [
         # u1 completes the funnel in order
         (_ts(minutes=1), 1, "view"),
@@ -56,7 +56,7 @@ def funnel_dir(spark):
         # u4 never enters the funnel
         (_ts(minutes=1), 4, "error"),
     ]
-    return _events_dir(spark, rows)
+    return _events_dir(spark, tmp_path_factory.mktemp("funnel"), rows)
 
 
 def test_funnel_stage_ordering_is_strict(spark, funnel_dir):
@@ -81,7 +81,7 @@ def test_funnel_pct_is_vs_previous_stage(spark, funnel_dir):
     assert rows["purchase_after_click"] == pytest.approx(1 / 1)
 
 
-def test_cohort_retention_offsets_and_share(spark):
+def test_cohort_retention_offsets_and_share(spark, tmp_path):
     rows = [
         # u1: first seen day 0; active again day 6 (offset 0), day 7
         # (offset 1) and day 20 (offset 2)
@@ -92,7 +92,7 @@ def test_cohort_retention_offsets_and_share(spark):
         # u2: same cohort day, never returns
         (_ts(days=0, minutes=5), 2, "view"),
     ]
-    d = _events_dir(spark, rows)
+    d = _events_dir(spark, tmp_path, rows)
     got = {
         (r["week_offset"], r["n_users"], r["pct_of_cohort"])
         for r in behavior.q_cohort_retention(spark, d).collect()
@@ -109,12 +109,12 @@ def test_transitions_probabilities_normalize_per_src(spark, sf_dir):
         assert total == pytest.approx(1.0, abs=1e-5), src
 
 
-def test_transitions_counts_on_known_sequence(spark):
+def test_transitions_counts_on_known_sequence(spark, tmp_path):
     rows = [
         (_ts(minutes=i), 1, et)
         for i, et in enumerate(["view", "click", "view", "click", "error"])
     ]
-    d = _events_dir(spark, rows)
+    d = _events_dir(spark, tmp_path, rows)
     got = {
         (r["src"], r["dst"]): (r["n"], r["p_transition"])
         for r in behavior.q_event_transitions(spark, d).collect()
@@ -126,14 +126,14 @@ def test_transitions_counts_on_known_sequence(spark):
     }
 
 
-def test_dwell_known_gaps(spark):
+def test_dwell_known_gaps(spark, tmp_path):
     rows = [
         (_ts(seconds=0), 1, "view"),
         (_ts(seconds=10), 1, "click"),   # view dwelled 10 s
         (_ts(seconds=40), 1, "view"),    # click dwelled 30 s
         (_ts(seconds=60), 1, "error"),   # view dwelled 20 s
     ]
-    d = _events_dir(spark, rows)
+    d = _events_dir(spark, tmp_path, rows)
     got = {
         r["event_type"]: (r["n"], r["avg_dwell_ms"], r["p50_dwell_ms"])
         for r in behavior.q_event_dwell(spark, d).collect()
@@ -221,7 +221,7 @@ def test_time_rollup_gapfill_dense_and_consistent(spark, sf_dir):
             assert r["sum_value"] == 0.0
 
 
-def test_time_rollup_constructed_gaps_and_boundaries(spark):
+def test_time_rollup_constructed_gaps_and_boundaries(spark, tmp_path):
     """Constructed-corpus edges for q_time_rollup: a multi-hour gap is
     zero-filled, events exactly ON an hour boundary bucket into that
     hour, a single-event corpus yields a 1×1 grid, and value sums land
@@ -234,6 +234,7 @@ def test_time_rollup_constructed_gaps_and_boundaries(spark):
     # then a 3-hour gap to 15:30
     d = _events_dir(
         spark,
+        tmp_path,
         [
             (_ts(hours=0), 1, "click"),        # 12:00:00 exact
             (_ts(minutes=59, seconds=59), 1, "click"),
@@ -255,7 +256,7 @@ def test_time_rollup_constructed_gaps_and_boundaries(spark):
             assert rows[(h, t)]["n_events"] == 0
             assert rows[(h, t)]["sum_value"] == 0.0
     # single-event corpus → 1×1 grid
-    d1 = _events_dir(spark, [(_ts(hours=1), 1, "click")])
+    d1 = _events_dir(spark, tmp_path, [(_ts(hours=1), 1, "click")])
     one = timeseries.q_time_rollup(spark, d1).collect()
     assert len(one) == 1
     assert one[0]["hour_iso"] == "2024-03-01 13:00"
@@ -268,9 +269,10 @@ def test_time_rollup_constructed_gaps_and_boundaries(spark):
 # tests pinned its semantics a round before the oracle sweep took over.
 
 
-def _attr_dir(spark, rows) -> str:
-    """(event_id, ts, user_id, event_type, value, k) rows -> fixture dir."""
-    d = tempfile.mkdtemp(prefix="attr_fixture_")
+def _attr_dir(spark, base, rows) -> str:
+    """(event_id, ts, user_id, event_type, value, k) rows -> a new
+    fixture dir under ``base``."""
+    d = tempfile.mkdtemp(prefix="attr_fixture_", dir=base)
     df = spark.createDataFrame(
         [(i, ts, uid, et, v, '{"k": %d}' % k) for i, ts, uid, et, v, k in rows],
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -282,7 +284,7 @@ def _attr_dir(spark, rows) -> str:
     return d
 
 
-def test_attribution_last_touch_lookback_and_ties(spark):
+def test_attribution_last_touch_lookback_and_ties(spark, tmp_path):
     rows = [
         # u1: search view then social click -> LAST touch (social) wins;
         # a second purchase later still credits social (the first
@@ -302,7 +304,7 @@ def test_attribution_last_touch_lookback_and_ties(spark):
         (8, _ts(minutes=1), 4, "view", 0.0, 3),      # k=3 -> ads
         (9, _ts(minutes=2), 4, "purchase", 3.0, 0),
     ]
-    d = _attr_dir(spark, rows)
+    d = _attr_dir(spark, tmp_path, rows)
     got = {
         r["channel"]: (r["conversions"], r["revenue"])
         for r in behavior.q_event_attribution(spark, d).collect()
@@ -314,13 +316,13 @@ def test_attribution_last_touch_lookback_and_ties(spark):
     }
 
 
-def test_attribution_boundary_is_inclusive(spark):
+def test_attribution_boundary_is_inclusive(spark, tmp_path):
     # a touch EXACTLY 24h before the purchase still attributes
     rows = [
         (0, _ts(hours=0), 1, "click", 0.0, 1),
         (1, _ts(hours=24), 1, "purchase", 9.0, 0),
     ]
-    d = _attr_dir(spark, rows)
+    d = _attr_dir(spark, tmp_path, rows)
     got = [tuple(r) for r in behavior.q_event_attribution(spark, d).collect()]
     assert got == [("social", 1, 9.0)]
 

@@ -1,10 +1,16 @@
 """Per-op fixed costs that every query pays before its first row:
 schema inference on a table load, the band tables of the two LSH
-dedup operators, and the LSH coefficient-matrix build. Each cut must
-leave the output exactly as it was."""
+dedup operators, the LSH coefficient-matrix build, and the compilation
+of generated classes that a too-small codegen cache evicts. Each cut
+must leave the output exactly as it was."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+import textwrap
 import time
 import uuid
 
@@ -20,6 +26,8 @@ from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions imp
     dedup,
     similarity,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _jobs_in_group(spark, action) -> list[int]:
@@ -172,3 +180,56 @@ def test_coeff_matrix_is_bit_identical_to_the_scalar_build(monkeypatch):
 def test_call_site_capture_is_off(spark):
     key = "spark.python.sql.dataFrameDebugging.enabled"
     assert spark.conf.get(key) == "false"
+
+
+# A fresh session, so that no earlier test has compiled the classes:
+# run the first op until it is steady, then the other five dedup ops,
+# then the first op once more, counting compiled classes around each.
+_WORKING_SET = textwrap.dedent(
+    """
+    import json, sys
+    sys.path.insert(0, {root!r})
+    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark import (
+        registry, session,
+    )
+
+    spark = session.get_spark(
+        "codegen_cache", cpus=2, extra_conf={{"spark.driver.memory": "1g"}}
+    )
+    fns = registry.all_queries()
+
+    def compiled(name):
+        before = session.codegen_compilations(spark)
+        fns[name](spark, {sf_dir!r}).collect()
+        session.evict_caches(spark)
+        return session.codegen_compilations(spark) - before
+
+    first, *rest = {ops!r}
+    cold, steady = compiled(first), compiled(first)
+    others = sum(compiled(name) for name in rest)
+    print(json.dumps({{"cold": cold, "steady": steady, "others": others,
+                      "again": compiled(first)}}))
+    spark.stop()
+    """
+)
+
+
+def test_warm_rerun_compiles_no_class_after_a_larger_working_set(
+    sf_dir, tmp_path
+):
+    """The five other dedup ops compile more classes than Spark's default
+    codegen cache holds (100); a re-run of the first op after them still
+    finds every class it needs in the cache. ``q_dedup_exact`` compiles
+    nothing on a steady re-run, so any compilation is an eviction."""
+    ops = ["q_dedup_exact", "q_dedup_near", "q_dedup_simhash", "q_sim_ann",
+           "q_text_tfidf", "q_dedup_ngram_jaccard"]
+    script = _WORKING_SET.format(root=ROOT, sf_dir=sf_dir, ops=ops)
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["cold"] > 0 and out["steady"] == 0, out
+    assert out["others"] > 100, out
+    assert out["again"] == 0, out

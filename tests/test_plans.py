@@ -98,12 +98,15 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir):
 
 def test_codegen_covers_plan(spark, sf_dir):
     # AQE hides codegen regions until runtime; scope it off for the check
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # and give the shared session back the value it had
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
     try:
         df = registry.all_queries()["q_agg_sum_avg"](spark, sf_dir)
         assert plans.wholestage_codegen_spans(df) >= 1
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        spark.conf.set(key, before)
 
 
 # Queries whose BroadcastNestedLoopJoin is DESIGNED: a provably-tiny

@@ -504,20 +504,20 @@ def test_xml_roundtrip_escaping(pb_spark, values):
     spark = pb_spark
     rows = [(i, v) for i, v in enumerate(values)]
     df = spark.createDataFrame(rows, "id bigint, payload string")
-    out = tempfile.mkdtemp(prefix="aub_xmlprop_")
-    df.write.mode("overwrite").option("rootTag", "rows").option(
-        "rowTag", "row"
-    ).xml(out)
-    back = (
-        spark.read.schema("id bigint, payload string")
-        .option("rowTag", "row")
-        # default trims surrounding whitespace — disable to prove the
-        # escaping itself round-trips whitespace-edge values
-        .option("ignoreSurroundingSpaces", "false")
-        .xml(out)
-    )
-    got = {(r.id, r.payload) for r in back.collect()}
-    assert got == set(rows)
+    with tempfile.TemporaryDirectory(prefix="aub_xmlprop_") as out:
+        df.write.mode("overwrite").option("rootTag", "rows").option(
+            "rowTag", "row"
+        ).xml(out)
+        back = (
+            spark.read.schema("id bigint, payload string")
+            .option("rowTag", "row")
+            # default trims surrounding whitespace — disable to prove the
+            # escaping itself round-trips whitespace-edge values
+            .option("ignoreSurroundingSpaces", "false")
+            .xml(out)
+        )
+        got = {(r.id, r.payload) for r in back.collect()}
+        assert got == set(rows)
 
 
 @settings(
@@ -710,41 +710,41 @@ def test_attribution_matches_python_reference(pb_spark, events):
         (i, BASE + timedelta(minutes=m), u, types[t], float(k) + 0.5, k)
         for i, (u, m, t, k) in enumerate(events)
     ]
-    d = tempfile.mkdtemp(prefix="aub_attrprop_")
-    spark.createDataFrame(
-        [(i, ts, u, et, v, '{"k": %d}' % k) for i, ts, u, et, v, k in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "events.parquet")
-    )
+    with tempfile.TemporaryDirectory(prefix="aub_attrprop_") as d:
+        spark.createDataFrame(
+            [(i, ts, u, et, v, '{"k": %d}' % k) for i, ts, u, et, v, k in rows],
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, "events.parquet")
+        )
 
-    # independent reference: linear scan per user over the (ts, event_id)
-    # total order, inclusive 24h lookback
-    ref: dict[str, list] = {}
-    by_user: dict[int, list] = {}
-    for r in rows:
-        by_user.setdefault(r[2], []).append(r)
-    for evs in by_user.values():
-        evs.sort(key=lambda r: (r[1], r[0]))
-        last = None  # (ts, channel)
-        for eid, ts, u, et, v, k in evs:
-            if et in ("view", "click"):
-                last = (ts, _ATTR_CHANNELS[k % 4])
-            elif et == "purchase":
-                ch = "organic"
-                if last is not None and ts - last[0] <= timedelta(hours=24):
-                    ch = last[1]
-                agg = ref.setdefault(ch, [0, 0.0])
-                agg[0] += 1
-                agg[1] += v
-    want = {ch: (n, pytest.approx(rev)) for ch, (n, rev) in ref.items()}
+        # independent reference: linear scan per user over the (ts, event_id)
+        # total order, inclusive 24h lookback
+        ref: dict[str, list] = {}
+        by_user: dict[int, list] = {}
+        for r in rows:
+            by_user.setdefault(r[2], []).append(r)
+        for evs in by_user.values():
+            evs.sort(key=lambda r: (r[1], r[0]))
+            last = None  # (ts, channel)
+            for eid, ts, u, et, v, k in evs:
+                if et in ("view", "click"):
+                    last = (ts, _ATTR_CHANNELS[k % 4])
+                elif et == "purchase":
+                    ch = "organic"
+                    if last is not None and ts - last[0] <= timedelta(hours=24):
+                        ch = last[1]
+                    agg = ref.setdefault(ch, [0, 0.0])
+                    agg[0] += 1
+                    agg[1] += v
+        want = {ch: (n, pytest.approx(rev)) for ch, (n, rev) in ref.items()}
 
-    got = {
-        r["channel"]: (r["conversions"], r["revenue"])
-        for r in q_event_attribution(spark, d).collect()
-    }
-    assert got == want
+        got = {
+            r["channel"]: (r["conversions"], r["revenue"])
+            for r in q_event_attribution(spark, d).collect()
+        }
+        assert got == want
 
 
 # Tiny alphabet + sub-word-width window: shared spans, within-doc-only
@@ -1275,92 +1275,92 @@ def test_total_order_sequence_queries_match_python(pb_spark, events):
         (i, BASE + timedelta(minutes=m), u, types[t], 1.0, "{}")
         for i, (u, m, t) in enumerate(events)
     ]
-    d = tempfile.mkdtemp(prefix="aub_seqprop_")
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "events.parquet")
-    )
-    qs = registry.all_queries()
-
-    # one sorted pass builds every per-user sequence
-    by_user: dict[int, list] = {}
-    for eid, ts, u, et, _v, _p in rows:
-        by_user.setdefault(u, []).append((ts, eid, et))
-    seqs = {
-        u: [et for _ts, _eid, et in sorted(evs)]
-        for u, evs in by_user.items()
-    }
-    times = {
-        u: [ts for ts, _eid, _et in sorted(evs)]
-        for u, evs in by_user.items()
-    }
-
-    # transitions
-    pair_n: dict[tuple[str, str], int] = {}
-    for u, s in seqs.items():
-        for a, b in zip(s, s[1:]):
-            pair_n[(a, b)] = pair_n.get((a, b), 0) + 1
-    src_tot: dict[str, int] = {}
-    for (a, _b), n in pair_n.items():
-        src_tot[a] = src_tot.get(a, 0) + n
-    want_tr = {
-        (a, b): (n, pytest.approx(round(n / src_tot[a], 6)))
-        for (a, b), n in pair_n.items()
-    }
-    got_tr = {
-        (r["src"], r["dst"]): (r["n"], r["p_transition"])
-        for r in qs["q_event_transitions"](spark, d).collect()
-    }
-    assert got_tr == want_tr, events
-
-    # dwell
-    def qlin(vals, q):
-        vals = sorted(vals)
-        pos = q * (len(vals) - 1)
-        lo = int(pos)
-        hi = min(lo + 1, len(vals) - 1)
-        return vals[lo] + (vals[hi] - vals[lo]) * (pos - lo)
-
-    dw: dict[str, list[int]] = {}
-    for u, s in seqs.items():
-        ts = times[u]
-        for i in range(len(s) - 1):
-            ms = int((ts[i + 1] - ts[i]).total_seconds() * 1000)
-            dw.setdefault(s[i], []).append(ms)
-    want_dw = {
-        et: (
-            len(v),
-            pytest.approx(round(sum(v) / len(v), 4)),
-            pytest.approx(round(qlin(v, 0.5), 4)),
-            pytest.approx(round(qlin(v, 0.95), 4)),
+    with tempfile.TemporaryDirectory(prefix="aub_seqprop_") as d:
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, "events.parquet")
         )
-        for et, v in dw.items()
-    }
-    got_dw = {
-        r["event_type"]: (
-            r["n"],
-            r["avg_dwell_ms"],
-            r["p50_dwell_ms"],
-            r["p95_dwell_ms"],
-        )
-        for r in qs["q_event_dwell"](spark, d).collect()
-    }
-    assert got_dw == want_dw, events
+        qs = registry.all_queries()
 
-    # top-10 trigram paths, (n DESC, path ASC) total order
-    tri: dict[str, int] = {}
-    for u, s in seqs.items():
-        for i in range(len(s) - 2):
-            p = ">".join(s[i : i + 3])
-            tri[p] = tri.get(p, 0) + 1
-    want_paths = sorted(tri.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
-    got_paths = [
-        (r["path"], r["n"]) for r in qs["q_path_topk"](spark, d).collect()
-    ]
-    assert got_paths == want_paths, events
+        # one sorted pass builds every per-user sequence
+        by_user: dict[int, list] = {}
+        for eid, ts, u, et, _v, _p in rows:
+            by_user.setdefault(u, []).append((ts, eid, et))
+        seqs = {
+            u: [et for _ts, _eid, et in sorted(evs)]
+            for u, evs in by_user.items()
+        }
+        times = {
+            u: [ts for ts, _eid, _et in sorted(evs)]
+            for u, evs in by_user.items()
+        }
+
+        # transitions
+        pair_n: dict[tuple[str, str], int] = {}
+        for u, s in seqs.items():
+            for a, b in zip(s, s[1:]):
+                pair_n[(a, b)] = pair_n.get((a, b), 0) + 1
+        src_tot: dict[str, int] = {}
+        for (a, _b), n in pair_n.items():
+            src_tot[a] = src_tot.get(a, 0) + n
+        want_tr = {
+            (a, b): (n, pytest.approx(round(n / src_tot[a], 6)))
+            for (a, b), n in pair_n.items()
+        }
+        got_tr = {
+            (r["src"], r["dst"]): (r["n"], r["p_transition"])
+            for r in qs["q_event_transitions"](spark, d).collect()
+        }
+        assert got_tr == want_tr, events
+
+        # dwell
+        def qlin(vals, q):
+            vals = sorted(vals)
+            pos = q * (len(vals) - 1)
+            lo = int(pos)
+            hi = min(lo + 1, len(vals) - 1)
+            return vals[lo] + (vals[hi] - vals[lo]) * (pos - lo)
+
+        dw: dict[str, list[int]] = {}
+        for u, s in seqs.items():
+            ts = times[u]
+            for i in range(len(s) - 1):
+                ms = int((ts[i + 1] - ts[i]).total_seconds() * 1000)
+                dw.setdefault(s[i], []).append(ms)
+        want_dw = {
+            et: (
+                len(v),
+                pytest.approx(round(sum(v) / len(v), 4)),
+                pytest.approx(round(qlin(v, 0.5), 4)),
+                pytest.approx(round(qlin(v, 0.95), 4)),
+            )
+            for et, v in dw.items()
+        }
+        got_dw = {
+            r["event_type"]: (
+                r["n"],
+                r["avg_dwell_ms"],
+                r["p50_dwell_ms"],
+                r["p95_dwell_ms"],
+            )
+            for r in qs["q_event_dwell"](spark, d).collect()
+        }
+        assert got_dw == want_dw, events
+
+        # top-10 trigram paths, (n DESC, path ASC) total order
+        tri: dict[str, int] = {}
+        for u, s in seqs.items():
+            for i in range(len(s) - 2):
+                p = ">".join(s[i : i + 3])
+                tri[p] = tri.get(p, 0) + 1
+        want_paths = sorted(tri.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+        got_paths = [
+            (r["path"], r["n"]) for r in qs["q_path_topk"](spark, d).collect()
+        ]
+        assert got_paths == want_paths, events
 
 
 # Users first seen on scattered days with activity spread over ~3
@@ -1401,65 +1401,65 @@ def test_cohort_and_growth_match_python_reference(pb_spark, events):
         (i, BASE + timedelta(days=dd, hours=hh), u, "view", 1.0, "{}")
         for i, (u, dd, hh) in enumerate(events)
     ]
-    d = tempfile.mkdtemp(prefix="aub_cohortprop_")
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(d, "events.parquet")
-    )
-    qs = registry.all_queries()
-
-    days = {}  # user -> set of day offsets
-    for _i, ts, u, _et, _v, _p in rows:
-        days.setdefault(u, set()).add((ts.date() - BASE.date()).days)
-    first = {u: min(ds) for u, ds in days.items()}
-
-    # cohort retention
-    cells: dict[tuple[int, int], set[int]] = {}
-    for u, ds in days.items():
-        for dd in ds:
-            off = (dd - first[u]) // 7
-            cells.setdefault((first[u], off), set()).add(u)
-    sizes = {
-        (c, off): len(us) for (c, off), us in cells.items()
-    }
-    want_coh = {}
-    for (c, off), n in sizes.items():
-        day_iso = (BASE + timedelta(days=c)).strftime("%Y-%m-%d")
-        want_coh[(day_iso, off)] = (
-            n,
-            pytest.approx(round(n / sizes[(c, 0)], 6)),
+    with tempfile.TemporaryDirectory(prefix="aub_cohortprop_") as d:
+        spark.createDataFrame(
+            rows,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, "events.parquet")
         )
-    got_coh = {
-        (str(r["cohort_day"]), r["week_offset"]): (
-            r["n_users"],
-            r["pct_of_cohort"],
-        )
-        for r in qs["q_cohort_retention"](spark, d).collect()
-    }
-    assert got_coh == want_coh, events
+        qs = registry.all_queries()
 
-    # growth accounting
-    by_day: dict[int, set[int]] = {}
-    for u, ds in days.items():
-        for dd in ds:
-            by_day.setdefault(dd, set()).add(u)
-    news = {}
-    for u, f in first.items():
-        news[f] = news.get(f, 0) + 1
-    cum = 0
-    want_gr = {}
-    for dd in sorted(by_day):
-        cum += news.get(dd, 0)
-        day_iso = (BASE + timedelta(days=dd)).strftime("%Y-%m-%d")
-        want_gr[day_iso] = (len(by_day[dd]), news.get(dd, 0), cum)
-    got_gr = {
-        str(r["d"]): (r["dau"], r["new_users"], r["cum_users"])
-        for r in qs["q_growth_accounting"](spark, d).collect()
-    }
-    assert got_gr == want_gr, events
+        days = {}  # user -> set of day offsets
+        for _i, ts, u, _et, _v, _p in rows:
+            days.setdefault(u, set()).add((ts.date() - BASE.date()).days)
+        first = {u: min(ds) for u, ds in days.items()}
+
+        # cohort retention
+        cells: dict[tuple[int, int], set[int]] = {}
+        for u, ds in days.items():
+            for dd in ds:
+                off = (dd - first[u]) // 7
+                cells.setdefault((first[u], off), set()).add(u)
+        sizes = {
+            (c, off): len(us) for (c, off), us in cells.items()
+        }
+        want_coh = {}
+        for (c, off), n in sizes.items():
+            day_iso = (BASE + timedelta(days=c)).strftime("%Y-%m-%d")
+            want_coh[(day_iso, off)] = (
+                n,
+                pytest.approx(round(n / sizes[(c, 0)], 6)),
+            )
+        got_coh = {
+            (str(r["cohort_day"]), r["week_offset"]): (
+                r["n_users"],
+                r["pct_of_cohort"],
+            )
+            for r in qs["q_cohort_retention"](spark, d).collect()
+        }
+        assert got_coh == want_coh, events
+
+        # growth accounting
+        by_day: dict[int, set[int]] = {}
+        for u, ds in days.items():
+            for dd in ds:
+                by_day.setdefault(dd, set()).add(u)
+        news = {}
+        for u, f in first.items():
+            news[f] = news.get(f, 0) + 1
+        cum = 0
+        want_gr = {}
+        for dd in sorted(by_day):
+            cum += news.get(dd, 0)
+            day_iso = (BASE + timedelta(days=dd)).strftime("%Y-%m-%d")
+            want_gr[day_iso] = (len(by_day[dd]), news.get(dd, 0), cum)
+        got_gr = {
+            str(r["d"]): (r["dau"], r["new_users"], r["cum_users"])
+            for r in qs["q_growth_accounting"](spark, d).collect()
+        }
+        assert got_gr == want_gr, events
 
 
 # --- salted half-pair combinatorics (similarity.salted_half_pairs) ---

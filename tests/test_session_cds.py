@@ -61,6 +61,17 @@ def test_key_changes_when_the_jars_or_the_java_runtime_change(tmp_path):
     )
 
 
+def test_key_differs_for_two_cds_dirs(tmp_path):
+    """The conf dir under the CDS dir is on the launcher's classpath, so
+    a checkout copied with its cache keys its archives apart."""
+    a, b = tmp_path / "a" / "cds", tmp_path / "b" / "cds"
+    assert session.launch_key({}, str(a)) == session.launch_key({}, str(a))
+    assert session.launch_key({}, str(a)) != session.launch_key({}, str(b))
+    (tmp_path / "link").symlink_to(tmp_path / "a")
+    link = tmp_path / "link" / "cds"
+    assert session.launch_key({}, str(link)) == session.launch_key({}, str(a))
+
+
 def test_compressed_oops_follow_the_heap_size():
     assert session._compressed_oops("4023m")
     assert session._compressed_oops("1g") and session._compressed_oops("1gb")
@@ -120,7 +131,7 @@ def test_plan_records_once_then_maps(tmp_path, monkeypatch):
     assert mode == "recording" and part.endswith(".part")
     assert session.cds_plan(cds, {}) == ("off", "")  # this process records
     _write(part, session.CDS_MAGIC + JUNK)
-    key = session.launch_key({})
+    key = session.launch_key({}, cds)
     session._write_owner(os.path.join(cds, f"{key}.lock"), _dead_pid())
     assert session.cds_plan(cds, {}) == ("mapped", os.path.join(cds, f"{key}.jsa"))
 
@@ -193,7 +204,7 @@ _LAUNCH = textwrap.dedent(
     session.CDS_DIR = {cache!r}
     conf = {{"spark.driver.memory": "512m",
              "spark.driver.defaultJavaOptions": "-Dcds.test.probe=1"}}
-    key = session.launch_key(conf)
+    key = session.launch_key(conf, session.CDS_DIR)
     os.makedirs(session.CDS_DIR)
     archive = os.path.join(session.CDS_DIR, key + ".jsa")
     with open(archive, "wb") as f:
