@@ -3,40 +3,36 @@
 The LLM-data-pipeline dedup ladder, each a separate declared query:
 
 - exact:   hash-groupBy on the full text (one shuffle on the text hash);
-- minhash: MinHash+LSH over word shingles — O(n) per doc, candidate
-  pairs only where a band bucket collides (bucket-join, no crossJoin);
+- minhash: the exact Jaccard ≥ 0.95 pairs, each flagged by whether its
+  two documents share a MinHash band key (8 bands × 4 minhashes), the
+  recall invariant of MinHash-LSH checked pair by pair;
 - ngram Jaccard: exact similarity join via lossless prefix filtering;
 - clusters: connected components over the near-dup graph (iterative
   min-label propagation), keeper per component;
-- simhash: 128-bit sign-sum fingerprint, banded for hamming-≤k pairs;
+- simhash: the identical-token-set pairs, each with the hamming distance
+  of its 128-bit sign-sum fingerprints and whether a 32-bit band matches;
 - embedding cosine: LSH-candidate nearest-neighbor flagging.
 
-At 100 TB exact dedup groups on a 128-bit fingerprint instead of the
-raw text (shuffle carries 16 bytes/doc, not the document), and LSH bands
-are the only crossing structure — the corpus is never self-joined.
+Exact dedup groups on an md5 of the text, so its shuffle carries a
+fixed-width key per document, not the document. Every pair join is an
+equi-join on a blocking key (prefix tokens, q-grams, LSH buckets); the
+corpus is never cross-joined.
 
 _CACHE_OWNERSHIP: the explicit ``persist(MEMORY_AND_DISK)`` calls in
 this module (minhash signatures, jaccard prefixes, containment ordered,
-semantic assignment, editdist location-prefixes (``withpre``, r8),
-simhash signatures, embed-cosine
-buckets and scored half-pairs, plus the occupancy-attached band
-tables the salted band joins persist inside
-``similarity.salted_half_pairs`` (r16 — ids + band hash keys + one
-int, one row per doc per band)) — plus the O(hours×types) rollup/
-interpolation base in ``operators/timeseries.py`` (r8) and the
-O(languages) count relation in ``functions/sampling.py``'s
-temperature resampler (late r8) —
-are SESSION-LIFETIME by design — the DataFrame API gives no
-sound unpersist point inside a lazily-returned plan (the consumer's
-action hasn't run yet), and the memoized relations (verified pairs →
-clusters) are cross-query shared on purpose, mirroring the staged
-tables a production pipeline would materialize. All rows cached are
-slim projections (ids + hashes, never document text or embeddings), so
-the resident set is O(corpus keys), and MEMORY_AND_DISK spills rather
-than evicting or OOMing. Timing harnesses own cache hygiene instead:
-``bench.py`` clears the Spark cache between repetitions of multi-rep
-queries so medians measure cold plans, not CacheManager reuse
-(ADVICE r6), and tests build per-fixture sessions.
+semantic assignment, editdist location-prefixes (``withpre``), simhash
+fingerprints, embed-cosine buckets and scored half-pairs), plus the
+O(hours×types) rollup/interpolation base in ``operators/timeseries.py``
+and the O(languages) count relation in ``functions/sampling.py``'s
+temperature resampler, are SESSION-LIFETIME by design: the DataFrame API
+gives no sound unpersist point inside a lazily-returned plan (the
+consumer's action hasn't run yet), and the memoized relations (verified
+pairs → clusters) are shared across queries on purpose, like the staged
+tables a production pipeline would materialize. All rows cached are slim
+projections (ids + hashes, never document text or embeddings), so the
+resident set is O(corpus keys), and MEMORY_AND_DISK spills rather than
+evicting or OOMing. Timing harnesses own cache hygiene instead
+(``session.evict_caches``), and tests build per-fixture sessions.
 """
 
 from __future__ import annotations
@@ -61,26 +57,18 @@ _N_BANDS = 8  # 8 bands × 4 rows — catches jaccard ≳ 0.5 pairs w.h.p.
 
 
 def minhash_chance_pairs(n: int) -> float:
-    """Expected CHANCE candidate pairs (distinct 4-minhash tuples whose
-    band keys nonetheless collide) for an n-doc corpus — the VERDICT
-    r13 item-5 audit of whether MinHash banding carries the same
-    fixed-width chance-collision fuse SimHash did.
+    """Expected CHANCE band matches (document pairs with distinct
+    4-minhash tuples whose band keys nonetheless collide) for an n-doc
+    corpus.
 
-    It does not, and the arithmetic is structural: SimHash band keys
-    WERE fingerprint bit-slices (4×32 = 128 bits of signal split over
-    bands → 2³² keys per band, hence the r13 adaptive widening), while
-    MinHash band keys are `xxhash64` over the band's 4 minhash values —
-    a 64-BIT key space regardless of corpus size. Two docs with EQUAL
-    tuples colliding is the LSH signal itself (P = J⁴ per band — the
-    intended recall curve, false positives killed by the exact-jaccard
-    verify); the only chance term is an xxhash64 collision between
-    DISTINCT tuples: E = _N_BANDS · C(n,2) / 2⁶⁴ ≈ 4n²/2⁶⁴. At the
-    100 TB regime's ~2.5·10¹⁰ docs (4 KB/doc) that is ~135 pairs —
-    noise against millions of true near-dups, each still
-    verify-filtered. The tuple space itself (4 values < 2³¹ → 2¹²⁴)
-    never binds; 2⁶⁴ is the fuse, and it holds to ~10¹² docs (~216k
-    chance pairs, still ≪ verify volume) before any geometry change
-    would be warranted. Enforced by test_minhash_band_space_fuse."""
+    MinHash band keys are `xxhash64` over the band's 4 minhash values, a
+    64-BIT key space regardless of corpus size. Two docs with EQUAL
+    tuples matching is the LSH signal itself (P = J⁴ per band, the
+    intended recall curve); the only chance term is an xxhash64
+    collision between DISTINCT tuples: E = _N_BANDS · C(n,2) / 2⁶⁴ ≈
+    4n²/2⁶⁴, ~135 pairs at 2.5·10¹⁰ docs. The tuple space itself
+    (4 values < 2³¹ → 2¹²⁴) never binds; 2⁶⁴ is the fuse, and it holds
+    to ~10¹² docs. Enforced by test_minhash_band_space_fuse."""
     return _N_BANDS * n * (n - 1) / 2 / 2**64
 
 
@@ -211,17 +199,12 @@ def _minhash_mins(hashed: pd.Series) -> pd.DataFrame:
     return out
 
 
-def minhash_banded(sigs: DataFrame) -> DataFrame:
-    """The banded MinHash table: one row per (doc, band) carrying
-    (doc_id, bk_0..bk_7, band_id, band_key), band key = xxhash64 of 4
-    consecutive minhashes. Factored out of minhash_lsh_pairs (r16) so
-    the salting tests and the band-space candidate audit build the
-    EXACT production cell space instead of re-deriving it."""
+def minhash_band_keys(sigs: DataFrame) -> DataFrame:
+    """(doc_id, bk_0..bk_7): band j's key is the xxhash64 of minhashes
+    4j..4j+3. Two documents meet in MinHash-LSH band j iff their bk_j
+    are equal."""
     rows_per_band = _N_HASHES // _N_BANDS
-    # one row per doc with all 8 band keys, so each banded row can
-    # carry every key for the first-collision-band guard in
-    # minhash_lsh_pairs
-    keyed = sigs.select(
+    return sigs.select(
         "doc_id",
         *[
             F.xxhash64(
@@ -235,160 +218,34 @@ def minhash_banded(sigs: DataFrame) -> DataFrame:
             for band in range(_N_BANDS)
         ],
     )
-    return _band_rows(keyed, [f"bk_{band}" for band in range(_N_BANDS)])
 
 
-def _band_rows(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
-    """(doc_id, *key_cols) → one row per (doc, band) carrying
-    (doc_id, *key_cols, band_id, band_key), band j's key = key_cols[j].
+def band_hits(pairs: DataFrame, keys: DataFrame) -> DataFrame:
+    """``pairs`` (doc_a, doc_b, ...) with both documents' band keys and a
+    boolean ``band_hit``.
 
-    One generator pass over ``keyed``: a per-band ``unionByName`` would
-    scan it once per band."""
-    return keyed.select(
-        "doc_id",
-        *key_cols,
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_id"), F.col(c).alias("band_key")
-                    )
-                    for j, c in enumerate(key_cols)
-                ]
-            )
-        ),
-    )
+    ``keys`` holds one row per document: doc_id and one key column per
+    band. Each key column c arrives as c_a (doc_a's) and c_b (doc_b's).
+    ``band_hit`` is true iff some band j has equal keys on both sides,
+    which is exactly when a banded LSH self-join would emit the pair.
+    Keys are compared within a band only: doc_a's band-0 key equal to
+    doc_b's band-1 key is not a hit. A NULL key matches nothing, as in
+    an equi-join."""
+    cols = [c for c in keys.columns if c != "doc_id"]
 
-
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate candidate pairs (doc_a, doc_b, est_jaccard) via
-    MinHash banding — the raw LSH operator.
-
-    Signatures → band keys (hash of 4 consecutive minhashes) → self-join
-    per band bucket → distinct candidate pairs with estimated jaccard
-    (fraction of agreeing minhashes). The corpus is never cross-joined:
-    only docs sharing a band bucket meet, so the join is an equi hash
-    join on (band_id, band_key) that scales linearly with collisions.
-
-    First-collision-band emission (r11, ported from
-    simhash_band_pairs): a pair is emitted only from the lowest band
-    whose keys match — band j survives iff no band j′ < j matched. A
-    true near-dup collides in ~all 8 bands, so the old
-    dropDuplicates consumed ~8× the output (66 M join rows for 8.3 M
-    pairs at sf0.1) in an extra exchange + dedup stage; the guard is
-    a map-side filter instead. Collision is DEFINED by band-key
-    (xxhash64) equality — the same proxy the join itself uses — so
-    the emitted pair set is bit-identical to the dropDuplicates form.
-
-    Shuffle discipline: the banded table carries (band_id, band_key,
-    doc_id) plus the 8 band keys for the first-band guard — ~88 B per
-    doc per band, still far from the 32-element signature arrays
-    (~2 KB/doc), which are re-attached to the SURVIVING candidate
-    pairs afterwards via two doc_id equi-joins, the same
-    slim-then-rejoin pattern as prefix_filtered_jaccard_join's
-    verification step.
-
-    Hot-cell salting (r16, VERDICT r15 item 2): the band self-join
-    routes through similarity.salted_half_pairs with cell key
-    (band_id, band_key), broadcast=False (band keys are data-scaled
-    hash values — occupancy attaches via a partitioned window count,
-    never a broadcast). A giant duplicate cluster's occ² enumeration
-    is thereby bounded at occ·_SALT_MAX_OCC per reducer with an
-    IDENTICAL output pair set (planted-cluster equality + dormancy
-    tests in tests/test_northstar.py). Dormant (s = 1, the historical
-    pair join) at the ORACLE scales — sf0.001/sf0.01 band occupancies
-    max 292/272, test-pinned — and genuinely ENGAGED at sf0.1, where
-    the deliberately self-similar fixture's near-dup clusters put 8
-    cells over the cap (occ_max 2700 → s = 6, a 2700² single-reducer
-    enumeration split six ways): the benched plan runs the hot path
-    for real, at ~+0.6 s over the unsalted join.
-    """
-    # PERSIST the signature table: it feeds the band table on BOTH
-    # sides of the bucket self-join and the two signature re-attach
-    # joins — and the higher-order-lambda minhash lineage defeats
-    # Spark's exchange reuse (see prefix_filtered_jaccard_join), so
-    # unpersisted the corpus is re-tokenized and re-permuted once per
-    # consumer.
-    # 32 longs + doc_id ≈ 260 B/doc; a production pipeline stages this
-    # exact table to storage. MEMORY_AND_DISK: spill, don't OOM.
-    from pyspark import StorageLevel
-
-    sigs = minhash_signatures(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    banded = minhash_banded(sigs)
-    bk_cols = [f"bk_{band}" for band in range(_N_BANDS)]
-    # The band self-join routes through similarity.salted_half_pairs
-    # (r16, VERDICT r15 item 2 — the declared application of the r15
-    # LSH-bucket salting): a giant duplicate cluster puts its whole
-    # membership behind ONE (band_id, band_key) cell, and the plain
-    # equi-join lands that cell's occ² pair enumeration on one reducer
-    # — the first-collision-band guard and the downstream repartition
-    # balance LATER stages, not the join reducers themselves. Hot
-    # cells past _SALT_MAX_OCC are salt-split losslessly (identical
-    # pair set — planted-cluster equality test), dormant at every
-    # fixture/uniform occupancy. broadcast=False because band keys are
-    # raw xxhash64 values: the distinct-cell count scales with the
-    # corpus (≈ 8n), so occupancy attaches via a partitioned window
-    # count instead of a data-scaled broadcast (ADVICE r15).
-    from .similarity import salted_half_pairs
-
-    bk_carry = tuple(bk_cols)
-    half = salted_half_pairs(
-        banded,
-        id_col="doc_id",
-        cell_cols=("band_id", "band_key"),
-        carry_cols=bk_carry,
-        broadcast=False,
-    )
-    first_band = None
-    for band in range(_N_BANDS):
-        cond = (F.col("band_id") == band)
-        for prev in range(band):
-            cond = cond & (
-                F.col(f"bk_{prev}_a") != F.col(f"bk_{prev}_b")
-            )
-        first_band = cond if first_band is None else (first_band | cond)
-    pairs = (
-        half.filter(first_band)
-        .select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("nn_id").alias("doc_b"),
+    def side(s: str) -> DataFrame:
+        return keys.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols],
         )
-        # rebalance before the per-pair est stage: the band join's
-        # output partitioning is (band_id, band_key), and hot buckets
-        # (giant dup clusters) serialize everything downstream — the
-        # sig re-attach joins broadcast, so no exchange would
-        # intervene. The old dropDuplicates paid an 8×-output exchange
-        # + dedup aggregation for this balance as a side effect; a
-        # plain repartition of the slim 16 B pair rows keeps the
-        # balance at 1×-output cost (measured: est stage 6.2 s →
-        # ~1 s at sf0.1 once balanced).
-        .repartition("doc_a", "doc_b")
-    )
-    sig = sigs.select(
-        "doc_id",
-        F.array(*[F.col(f"mh_{i}") for i in range(_N_HASHES)]).alias("sig"),
-    )
-    with_sigs = pairs.join(
-        sig.select(
-            F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")
-        ),
-        "doc_a",
-    ).join(
-        sig.select(
-            F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")
-        ),
-        "doc_b",
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    ).cast("double") / F.lit(float(_N_HASHES))
-    return with_sigs.select(
-        "doc_a", "doc_b", F.round(est, 6).alias("est_jaccard")
+
+    hit = F.col(f"{cols[0]}_a") == F.col(f"{cols[0]}_b")
+    for c in cols[1:]:
+        hit = hit | (F.col(f"{c}_a") == F.col(f"{c}_b"))
+    return (
+        pairs.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .withColumn("band_hit", hit)
     )
 
 
@@ -414,35 +271,40 @@ _NEAR_CERTAIN_T = 0.95  # banding theory: P(miss) = (1−0.95⁴)⁸ ≈ 1.4e-6
     """,
 )
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup detection, driver-checked via its recall
-    invariant: every pair with TRUE token-set jaccard ≥ 0.95 must appear
-    in the LSH candidate set (banding theory puts the miss probability
-    at (1−j⁴)⁸ ≈ 1.4e-6 per pair at j=0.95 — far below one expected
-    miss on any fixture).
+    """MinHash-LSH near-dup detection, driver-checked via its recall
+    invariant: every pair with TRUE token-set jaccard ≥ 0.95 must be an
+    LSH candidate, i.e. share at least one of its 8 band keys (banding
+    theory puts the miss probability at (1−j⁴)⁸ ≈ 1.4e-6 per pair at
+    j=0.95 — far below one expected miss on any fixture).
 
-    The raw candidate SET (``minhash_lsh_pairs``) is engine-specific —
-    its xxhash64-seeded signatures have no ANSI-SQL twin — so the
-    registered query emits the SQL-expressible one-sided invariant
-    instead: exact-jaccard ≥ 0.95 pairs (prefix-filtered join, itself
-    oracle-checked under q_dedup_ngram_jaccard) left-joined against the
-    LSH candidates, with ``in_lsh`` (1/0 — INT, not boolean: the
-    driver canonicalizer has only ever hashed int/double/string
-    columns) flagging membership. The oracle asserts 1 for every row,
-    so a single missed pair hash-mismatches the driver row. Broader
-    recall (j ≥ 0.8 ⇒ ≥ 0.95) and estimate accuracy stay gated in
-    tests/test_northstar.py.
+    The candidate set itself is engine-specific (its xxhash64-seeded
+    signatures have no ANSI-SQL twin), so the registered query emits the
+    SQL-expressible one-sided invariant: the exact-jaccard ≥ 0.95 pairs
+    (prefix-filtered join, itself oracle-checked under
+    q_dedup_ngram_jaccard), each with ``in_lsh`` (1/0, INT: the driver
+    canonicalizer hashes int/double/string columns) set from the pair's
+    own band keys by :func:`band_hits`. Only the exact pairs are ever
+    checked, so no band self-join is built. The oracle asserts 1 for
+    every row, so a single missed pair hash-mismatches the driver row.
+    Broader recall (j ≥ 0.8 ⇒ ≥ 0.95) and estimate accuracy stay gated
+    in tests/test_northstar.py.
+
+    The signatures are persisted: they feed both the doc_a and the doc_b
+    side, and the Arrow UDF lineage would otherwise run once per side.
     """
-    cands = minhash_lsh_pairs(spark, sf_dir).select(
-        "doc_a", "doc_b", F.lit(1).alias("in_lsh")
+    from pyspark import StorageLevel
+
+    sigs = minhash_signatures(spark, sf_dir).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     true_near = prefix_filtered_jaccard_join(
         load_table(spark, sf_dir, "documents"), threshold=_NEAR_CERTAIN_T
     )
-    return true_near.join(cands, ["doc_a", "doc_b"], "left").select(
+    return band_hits(true_near, minhash_band_keys(sigs)).select(
         "doc_a",
         "doc_b",
         "jaccard",
-        F.coalesce("in_lsh", F.lit(0)).cast("int").alias("in_lsh"),
+        F.when(F.col("band_hit"), 1).otherwise(0).cast("int").alias("in_lsh"),
     )
 
 
@@ -1132,120 +994,31 @@ def connected_components(
 
 # --- SimHash --------------------------------------------------------------
 
-# 128 bits = 4 × 32-bit bands (r11; was 60/4×15 through r10, 48/4×12
-# through r6). Band width is THE scale knob of fixed-width banding:
-# chance band collisions between unrelated documents arrive at rate
-# ~bands·n²/2^width, so each added band bit halves the quadratic term.
-# (Historical correction: the quadratic r10 measured — exponent 1.96,
-# 1739 s at 50k docs — was NOT this saturation; it was the degenerate
-# all-ones/all-zero fingerprints of the lambda-arity bug fixed in r11
-# (see simhash_fingerprints), i.e. one giant band bucket. At 15-bit
-# bands the genuine chance term at 50k docs is only ~150k pairs. The
-# widening still stands on the math: at 100 TB doc counts the 15-bit
-# space really would saturate.) 32-bit bands put chance candidates at
-# 4·(n²/2)/2^32 — under ~10k pairs out to ~5 M docs per band space —
-# and a per-shard corpus partition (prepend a shard column to the band
-# key) covers beyond that; r11 probe: sub-linear 0.44/0.43 exponents
-# through 100× and 1000× (500k docs, 9.5 s). The fingerprint is stored as FOUR bigint
-# columns sh0..sh3, one 32-bit band word each — the band key IS the
-# word (no shift/mask at join time) and nothing touches a bigint's
-# sign bit, so no unsigned-shift gymnastics anywhere. Bits 0..63 come
-# from xxhash64(token), bits 64..127 from xxhash64(1, token) — two
-# independent 64-bit hash families, both JVM-side.
-# Width-independent invariants that survive the widening unchanged:
-# pigeonhole losslessness for hamming ≤ 3 needs only >=4 bands, and
-# the driver-checked oracle (identical token sets ⇒ hamming 0, in
-# every band) is a pure function of the token-hash set. NOTE the
-# THRESHOLD's meaning does tighten: hamming ≤3 of 128 is a stricter
-# similarity gate than ≤3 of 60 (Google's production config is 64-bit
-# /≤3; 128/≤3 is a high-precision near-dup filter). MinHash-LSH
-# (q_dedup_near, tunable recall) remains the scale-path near-dup
-# default; simhash is the cheap high-precision tool.
+# 128 bits = 4 × 32-bit bands. The fingerprint is stored as FOUR bigint
+# columns sh0..sh3, one 32-bit band word each, so a band key IS the word
+# (no shift/mask when comparing) and nothing touches a bigint's sign
+# bit. Bits 0..63 come from xxhash64(token), bits 64..127 from
+# xxhash64(1, token): two independent 64-bit hash families, both
+# JVM-side. By pigeonhole, hamming ≤ 3 over 4 bands forces one
+# identical band, so the band predicate loses no pair at that threshold.
+# Identical token sets give identical fingerprints (the construction is
+# a pure function of the token-hash set): hamming 0, equal in every
+# band, which is what the driver-checked oracle asserts. Hamming ≤ 3 of
+# 128 is a high-precision near-dup gate; MinHash-LSH (q_dedup_near) is
+# the tunable-recall one.
 _SIMHASH_BITS = 128
-_SIMHASH_BANDS = 4  # 4 × 32-bit bands block the pair search
+_SIMHASH_BANDS = 4
 _SIMHASH_BAND_WIDTH = _SIMHASH_BITS // _SIMHASH_BANDS  # 32
 _HAMMING_MAX = 3
 
-# r13: the band GEOMETRY is now corpus-adaptive, exactly as
-# similarity.n_planes_for made the hyperplane bucket width adaptive in
-# r12 — and for the same reason: a fixed-width code space is a
-# quadratic with a fuse ("raise the width at scale" was a comment, not
-# code; the r12 embed-cosine fix is the playbook, VERDICT r12 item 1).
-# The chance-collision candidate term of 4-band blocking is
-# 4·(n²/2)/2^band_width — with an ARITHMETIC CORRECTION to the record:
-# prior rounds' notes quoted this term 1000× high ("116k pairs at 500k
-# docs"; it is ~116 — 5·10¹¹/2³² ≈ 116.4, and SCALE.md r13 carries the
-# correction). The corrected fuse sits at 10⁸–10¹⁰ docs — which is not
-# a reprieve: 100 TB of 10 KB documents IS 10¹⁰ docs, where 32-bit
-# bands produce 4.7·10¹⁰ chance candidates (≈5n, the join drowns in
-# noise) while 64-bit bands hold the same corpus to ~10 pairs. The
-# ceiling below is therefore ENFORCED, not narrated: bands widen from
-# 32 to 64 bits (fingerprint 128 → 256, one 64-bit hash family per
-# band) once expected chance candidates would exceed 10k — an absolute
-# waste budget, the same shape as n_planes_for's absolute occupancy
-# target. Transition at n ≈ 4.6M docs; every fixture scale (500–5000
-# docs) AND the measured r11/r12 probe scales (≤500k docs, chance
-# ≈116 pairs, exponents 0.44/0.45) keep the historical 128-bit
-# geometry bit-identically, so all static oracles and probe baselines
-# replay unchanged. The widened threshold's SEMANTICS tighten the same
-# way the r11 60→128 widening did (hamming ≤3 of 256 gates harder than
-# ≤3 of 128 — pigeonhole losslessness only needs ≥4 bands, so the
-# blocking stays lossless); MinHash-LSH remains the tunable-recall
-# near-dup default, simhash the cheap high-precision filter. Both
-# geometries store the SAME schema — doc_id + sh0..sh3, one bigint
-# band word each — so the band join, first-band emission and
-# popcount-hamming verify below are geometry-independent; 64-bit band
-# words may use the sign bit (equality/xor/bit_count are all
-# sign-agnostic). Construction of BOTH widths is pinned bit-exact
-# against a pure-Python sign-sum replay (tests/test_northstar.py, the
-# r11 anti-degeneracy lesson).
-_SIMHASH_TARGET_CHANCE = 10_000  # expected chance-candidate ceiling
 
-
-def _simhash_band_bits_for(n: int) -> int:
-    """Band width (32 or 64 bits) for an n-doc corpus: smallest stored
-    width whose expected chance-collision candidates 4·(n²/2)/2^w stay
-    ≤ _SIMHASH_TARGET_CHANCE. 32 for every n ≤ ~4.6M — which covers
-    all fixtures and the r11/r12 probe scales bit-identically; 64-bit
-    bands hold even a 10¹⁰-doc (100 TB) corpus to ~10 chance pairs."""
-    return 32 if 4 * (n * n / 2) / 2**32 <= _SIMHASH_TARGET_CHANCE else 64
-
-
-# Wide-geometry twin of _simhash_sign_sum (see its note for why the
-# decorated module-level form is load-bearing): 256-bit fingerprint
-# from FOUR independent 64-bit hash families, band j = family j's full
-# word. Accumulates in uint64 (bit 63 is in play) and reinterprets to
-# int64 for the bigint columns — equality/xor/bit_count downstream are
-# sign-agnostic.
-@F.pandas_udf(
-    StructType(
-        [StructField(f"sh{j}", LongType()) for j in range(_SIMHASH_BANDS)]
-    )
-)
-def _simhash_sign_sum_wide(
-    h0: pd.Series, h1: pd.Series, h2: pd.Series, h3: pd.Series
-) -> pd.DataFrame:
-    return pd.DataFrame(
-        _sign_sum_bands((h0, h1, h2, h3), 64),
-        columns=[f"sh{j}" for j in range(_SIMHASH_BANDS)],
-    )
-
-
-def simhash_fingerprints(
-    spark: SparkSession, sf_dir: str, band_bits: int | None = None
-) -> DataFrame:
-    """doc_id → SimHash over distinct word tokens (map-only).
+def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """doc_id → 128-bit SimHash over distinct word tokens (map-only).
 
     Classic sign-sum construction (Charikar 2002): bit i of the
     fingerprint is set iff more token hashes have bit i set than not.
-    Output schema is doc_id + sh0..sh3, one bigint band word each,
-    at the geometry `band_bits` selects — 32 (128-bit fingerprint,
-    band j = global bits 32j..32j+31, values all positive) or 64
-    (256-bit, band j = hash family j's full word, sign bit in play —
-    downstream equality/xor/bit_count are sign-agnostic). Default
-    (None) picks the width from the corpus footer row count via
-    _simhash_band_bits_for; explicit values exist for tests and the
-    control arm of scale probes.
+    Output schema is doc_id + sh0..sh3, one bigint band word each
+    (band j = global bits 32j..32j+31, values all non-negative).
 
     Hybrid JVM/Arrow split, measured at sf0.1 (5k docs, 32 threads):
     token hashing stays a JVM expression (xxhash64 over the distinct
@@ -1255,60 +1028,30 @@ def simhash_fingerprints(
     all-expression alternatives do NOT codegen well at this width:
     128 × size(filter(...)) ran 7.1 s steady, 128 × F.aggregate
     8.1 s, a 64-field count-struct aggregate 16 s — versus 0.47 s for
-    the vectorized UDF. (Pre-r11 the expression form LOOKED fast
-    because a lambda-arity bug made all 128 bit tests the same
-    expression — Catalyst CSE collapsed them into one pass, and every
-    fingerprint collapsed to all-ones/all-zero. The bug: PySpark
-    derives a higher-order lambda's arity from its Python signature,
-    so `lambda h, m=mask:` is the TWO-argument (element, index) form
-    and the "default" silently binds to the ARRAY INDEX.
-    tests/test_northstar.py now pins the construction bit-exactly
-    against a pure-Python sign-sum of the collected token hashes,
-    which a degenerate or drifted fingerprint cannot pass.)
+    the vectorized UDF. A higher-order lambda's arity comes from its
+    Python signature, so `lambda h, m=mask:` is the two-argument
+    (element, index) form and the "default" binds to the ARRAY INDEX;
+    that trap once collapsed every fingerprint to all-ones/all-zero.
+    tests/test_northstar.py pins the construction bit-exactly against a
+    pure-Python sign-sum of the collected token hashes, which a
+    degenerate or drifted fingerprint cannot pass.
     Still map-only — no shuffle; the Arrow hop ships (doc_id, 2 hash
     arrays) once per doc and returns 32 bytes.
     """
-    from ..catalog import table_rows
     from ..serialization import pickle_module_by_value
 
-    # Both sign-sum UDFs now delegate to the module-level
-    # _sign_sum_bands helper; a by-value-pickled UDF's reference to a
-    # named module-level function would otherwise travel by module +
-    # qualname and die in vanilla-session workers (the serialization.py
-    # rationale) — register this module for by-value transport, same
-    # as similarity.bucketed_all_tables does for its module.
+    # The sign-sum UDF delegates to the module-level _sign_sum_bands; a
+    # by-value-pickled UDF's reference to a named module-level function
+    # would otherwise travel by module + qualname and die in
+    # vanilla-session workers (the serialization.py rationale), so this
+    # module is registered for by-value transport.
     pickle_module_by_value(__name__)
 
-    if band_bits is None:  # geometry from the corpus size (footer read)
-        band_bits = _simhash_band_bits_for(
-            table_rows(spark, sf_dir, "documents")
-        )
-    if band_bits not in (32, 64):
-        # fail loudly: silently mapping e.g. 16 onto the narrow UDF
-        # would label a control measurement with a width it was never
-        # computed at (r13 review)
-        raise ValueError(f"band_bits must be 32 or 64, got {band_bits!r}")
     d = load_table(spark, sf_dir, "documents")
     toks = F.array_distinct(F.filter(F.split("text", " "), lambda w: w != ""))
-    # independent 64-bit hash families cover the bit positions: two for
-    # the 128-bit geometry, four for the 256-bit one (family k =
-    # xxhash64 seeded by the literal k; family 0 keeps the unseeded
-    # historical form)
-    # NB the per-family seed is captured via a closure FACTORY, never a
-    # lambda default arg: `lambda w, k=k:` is the two-argument
-    # (element, index) higher-order form and k silently binds to the
-    # ARRAY INDEX — the exact arity trap that degenerated the pre-r11
-    # fingerprint (see the construction-history note below).
-    def _family(k: int):
-        if k == 0:
-            return F.transform(toks, lambda w: F.xxhash64(w))
-        return F.transform(toks, lambda w: F.xxhash64(F.lit(k), w))
-
-    hashes = [_family(k) for k in range(4 if band_bits == 64 else 2)]
-    sign_sum = (
-        _simhash_sign_sum_wide(*hashes)
-        if band_bits == 64
-        else _simhash_sign_sum(*hashes)
+    sign_sum = _simhash_sign_sum(
+        F.transform(toks, lambda w: F.xxhash64(w)),
+        F.transform(toks, lambda w: F.xxhash64(F.lit(1), w)),
     )
     return d.select("doc_id", sign_sum.alias("s")).select(
         "doc_id",
@@ -1345,17 +1088,14 @@ def _simhash_sign_sum(hlo: pd.Series, hhi: pd.Series) -> pd.DataFrame:
 
 
 def _sign_sum_bands(families, band_width: int):
-    """Shared sign-sum core for BOTH band geometries (one copy of the
-    fragile numpy machinery — r13 review): `families` is a sequence of
+    """Sign-sum core of the SimHash UDF: `families` is a sequence of
     pd.Series of int64 hash arrays (one per 64-bit hash family, equal
     row lengths since all derive from one token array); returns an
     (nrows × _SIMHASH_BANDS) int64 matrix of band words at
-    `band_width` bits per band (32 → global bit wsel·64+b lands in
-    word divmod(g, 32); 64 → band j IS family j). Accumulates in
-    uint64 (the wide geometry uses bit 63) and reinterprets to int64
-    for the bigint columns — downstream equality/xor/bit_count are
-    sign-agnostic, and narrow-band values never touch the sign bit so
-    the view is identity there."""
+    `band_width` bits per band (global bit wsel·64+b lands in word
+    divmod(g, band_width)). Accumulates in uint64 so a 64-bit band may
+    use bit 63, and reinterprets to int64 for the bigint columns; at 32
+    bits the sign bit is never set, so the view is the identity."""
     nrows = len(families[0])
     out = np.zeros((nrows, _SIMHASH_BANDS), dtype=np.uint64)
     empty = np.empty(0, dtype=np.int64)
@@ -1398,110 +1138,6 @@ def _sign_sum_bands(families, band_width: int):
     return out.view(np.int64)
 
 
-def simhash_banded(sigs: DataFrame) -> DataFrame:
-    """The banded SimHash table: one row per (doc, band) carrying
-    (doc_id, sh0..sh3, band_id, band_key), band key = the stored band
-    word itself. Factored out of simhash_band_pairs (r16) so the
-    salting tests and the band-space candidate audit build the EXACT
-    production cell space instead of re-deriving it."""
-    return _band_rows(sigs, [f"sh{j}" for j in range(_SIMHASH_BANDS)])
-
-
-def simhash_band_pairs(
-    spark: SparkSession, sf_dir: str, band_bits: int | None = None
-) -> DataFrame:
-    """(doc_a, doc_b, hamming) near-dup pairs by SimHash hamming ≤ 3.
-
-    Fingerprints band into 4 × 32-bit keys (the stored band words
-    sh0..sh3 — no shift/mask at join time); a pair is a candidate iff
-    it collides in ≥1 band (pigeonhole: hamming ≤ 3 over 4 bands forces
-    one identical band — the blocking is *lossless* for the ≤3
-    threshold). Exact hamming via summed per-word bit_count(xor)
-    verifies candidates. Band-bucketed equi-join, never all-pairs;
-    chance collisions arrive at ~4·(n²/2)/2^band_bits, and since r13
-    the band width is corpus-adaptive (_simhash_band_bits_for: 32-bit
-    bands through ~4.6M docs — bit-identical to the r11/r12 geometry
-    at every fixture and probe scale, exponents 0.44/0.45 measured —
-    then 64-bit bands, which hold even a 10¹⁰-doc corpus to ~10
-    expected chance pairs where 32-bit bands would drown the join in
-    4.7·10¹⁰ of them; see the geometry note above for the corrected
-    arithmetic). Completeness is property-tested against a Python
-    all-pairs hamming scan at BOTH widths (tests/test_northstar.py).
-
-    The signature table is PERSISTED: it feeds the band table on both
-    self-join sides, and unpersisted the Arrow-batched sign-sum UDF
-    reruns for each.
-    One slim (doc_id, 4×bigint) row per doc — MEMORY_AND_DISK spills,
-    never OOMs. Session-lifetime cache by design (_CACHE_OWNERSHIP,
-    module top).
-
-    Hot-cell salting (r16, VERDICT r15 item 2): the band self-join
-    routes through similarity.salted_half_pairs — cell key
-    (band_id, band_key), broadcast=False (fingerprint words are a
-    data-scaled domain; occupancy attaches via a partitioned window
-    count) — so a hamming-0 mega-cluster's occ² reducer work is capped
-    at occ·_SALT_MAX_OCC with an identical output pair set
-    (planted-cluster equality + dormancy tests in
-    tests/test_northstar.py). Dormant at the oracle scales (sf0.001/
-    sf0.01 band occupancies max 83/73); engaged for real at sf0.1 (one
-    cell, occ 710 → s = 2) — the benched plan exercises the hot path.
-    """
-    from pyspark import StorageLevel
-
-    sigs = simhash_fingerprints(spark, sf_dir, band_bits).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sig_cols = [f"sh{j}" for j in range(_SIMHASH_BANDS)]
-    banded = simhash_banded(sigs)
-    # Band self-join through similarity.salted_half_pairs (r16,
-    # VERDICT r15 item 2), same rationale as minhash_lsh_pairs: a
-    # hamming-0 mega-cluster is one (band_id, band_key) cell whose occ²
-    # enumeration would otherwise serialize on a single reducer; the
-    # salt split bounds it at occ·cap with an IDENTICAL output pair
-    # set. broadcast=False — band keys are fingerprint words, a
-    # data-scaled domain no broadcast may ship (ADVICE r15).
-    from .similarity import salted_half_pairs
-
-    half = salted_half_pairs(
-        banded,
-        id_col="doc_id",
-        cell_cols=("band_id", "band_key"),
-        carry_cols=tuple(sig_cols),
-        broadcast=False,
-    )
-    hamming = sum(
-        (
-            F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b")))
-            for c in sig_cols
-        ),
-        start=F.lit(0),
-    )
-    # Emit each pair from its FIRST colliding band only: band j
-    # survives iff no band j' < j already matched. A hamming-0 pair
-    # collides in all 4 bands, and on a self-similar corpus most true
-    # pairs ARE hamming-0 — so the old dropDuplicates shuffled ~4×
-    # the output (39 M rows for 9.8 M pairs at sf0.1) just to throw
-    # 3/4 away. The banded rows already carry every band word for the
-    # hamming check, so this is a map-side filter replacing an entire
-    # exchange+dedup stage (r11; the same trick does not transfer to
-    # minhash_lsh_pairs, whose banded rows carry only the one hashed
-    # band key).
-    first_band = None
-    for j in range(_SIMHASH_BANDS):
-        cond = (F.col("band_id") == j)
-        for jp in range(j):
-            cond = cond & (F.col(f"sh{jp}_a") != F.col(f"sh{jp}_b"))
-        first_band = cond if first_band is None else (first_band | cond)
-    return (
-        half.filter(first_band & (hamming <= _HAMMING_MAX))
-        .select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("nn_id").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-    )
-
-
 @query(
     "q_dedup_simhash",
     oracle="""
@@ -1519,27 +1155,32 @@ def simhash_band_pairs(
     """,
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash banded near-dup search, driver-checked via its exactness
-    invariant (VERDICT r3 item 6 — was rows-only).
+    """SimHash banded near-dup check, driver-checked via its exactness
+    invariant.
 
     The raw candidate set is engine-specific (xxhash64 fingerprints have
     no ANSI-SQL twin), so the registered query emits the SQL-expressible
     one-sided invariant instead, mirroring q_dedup_near: documents with
     IDENTICAL distinct-token sets have — deterministically — identical
     sign-sum fingerprints (the construction is a pure function of the
-    token-hash set), hence hamming 0 and a collision in every band. The
+    token-hash set), hence hamming 0 and a match in every band. The
     oracle computes those pairs exactly (sorted-distinct-token-list
     equality, empty tokens filtered on BOTH engines so runs of spaces
-    cannot split the pairing) and asserts hamming=0, in_bands=1; any fingerprint or
-    banding regression mismatches the driver hash. The fixture makes
-    this non-vacuous (444 identical-set pairs at sf0.01). The broader
-    hamming-≤3 band-completeness bound stays property-tested in
-    tests/test_northstar.py against a Python all-pairs scan.
+    cannot split the pairing) and asserts hamming=0, in_bands=1. Each
+    pair's flags come from its own fingerprints (:func:`band_hits` over
+    sh0..sh3): a pair is in the bands iff some band word is equal and
+    the popcount hamming is ≤ 3; otherwise it reads hamming -1,
+    in_bands 0. Any fingerprint or banding regression mismatches the
+    driver hash. The fixture makes this non-vacuous (444
+    identical-set pairs at sf0.01).
 
-    Scale shape: ground-truth side is an equi-join on a 64-bit token-set
-    hash (collision-checked on the array), candidate side the banded
-    equi-join — both key-partitioned shuffles, no all-pairs anywhere.
+    Scale shape: the pairs come from an equi-join on a 64-bit token-set
+    hash (collision-checked on the array); the fingerprints attach by
+    two doc_id equi-joins. They are persisted, because they feed both
+    sides and the Arrow sign-sum would otherwise run once per side.
     """
+    from pyspark import StorageLevel
+
     d = load_table(spark, sf_dir, "documents")
     words = F.array_sort(
         F.array_distinct(F.filter(F.split("text", " "), lambda w: w != ""))
@@ -1564,15 +1205,22 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.doc_id").alias("doc_b"),
         )
     )
-    cand = simhash_band_pairs(spark, sf_dir)
-    return same.join(cand, ["doc_a", "doc_b"], "left").select(
+    sigs = simhash_fingerprints(spark, sf_dir).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    hamming = sum(
+        (
+            F.bit_count(F.col(f"sh{j}_a").bitwiseXOR(F.col(f"sh{j}_b")))
+            for j in range(_SIMHASH_BANDS)
+        ),
+        start=F.lit(0),
+    )
+    in_bands = F.col("band_hit") & (hamming <= _HAMMING_MAX)
+    return band_hits(same, sigs).select(
         "doc_a",
         "doc_b",
-        F.coalesce(F.col("hamming"), F.lit(-1)).cast("int").alias("hamming"),
-        F.when(F.col("hamming").isNotNull(), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("in_bands"),
+        F.when(in_bands, hamming).otherwise(-1).cast("int").alias("hamming"),
+        F.when(in_bands, 1).otherwise(0).cast("int").alias("in_bands"),
     )
 
 

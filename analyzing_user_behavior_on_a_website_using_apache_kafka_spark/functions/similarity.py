@@ -250,7 +250,7 @@ def n_planes_for(n: int) -> int:
     cand/vec across 10×/100×/1000×, exponent ≈1.15) decomposed the
     residual over-1 as bucket-occupancy SKEW (E[occ²]/E[occ]² ≈ 1.36
     at 1000×) plus ceil-width quantization
-    (tools/lsh_candidate_audit.py, SCALE.md r13) — and r14 traced the
+    (SCALE.md r13) — and r14 traced the
     skew itself to plane-plane correlation and removed it (see
     _coeff_matrix; audit now reads a constant ≈1.08 through 5M
     vectors). Practical
@@ -292,7 +292,7 @@ def n_planes_for(n: int) -> int:
 
     Fixed-geometry control measurements (the quadratic this rule
     removes) pass an explicit width to `bucketed_all_tables` instead
-    of overriding this function — see tools/lsh_candidate_audit.py."""
+    of overriding this function."""
     import math
 
     need = math.ceil(math.log2(max(1.0, n / _TARGET_BUCKET)))
@@ -317,8 +317,7 @@ def n_tables_for(n_planes: int) -> int:
     within 1000–2812 across ALL widths — versus 2000 flat with recall
     collapsing to 0.75, under the old geometry. Cost of
     more tables is map-side only (one wider Arrow matmul per batch);
-    candidate volume is what the audit gates (tools/
-    lsh_candidate_audit.py), and it is budget-bounded by construction.
+    candidate volume is budget-bounded by construction.
     """
     import math
 
@@ -647,170 +646,61 @@ def salt_splits_for(occ: int) -> int:
     return max(1, -(-occ // _SALT_MAX_OCC))
 
 
-def salted_half_pairs(
-    bucketed: DataFrame,
-    id_col: str = "vec_id",
-    max_occ: int = None,
-    cell_cols: tuple = ("tbl", "bucket"),
-    carry_cols: tuple = (),
-    broadcast: bool = True,
-) -> DataFrame:
-    """Candidate half-pairs (a < b co-bucketed in some cell) with hot
-    cells SALT-SPLIT so no reducer's pair work exceeds
-    ~occ × _SALT_MAX_OCC (r15, VERDICT r14 item 3; generalized to the
-    band self-joins in r16, VERDICT r15 item 2).
+def salted_half_pairs(bucketed: DataFrame, max_occ: int = None) -> DataFrame:
+    """Candidate half-pairs (doc_id < nn_id, co-bucketed in some
+    (tbl, bucket) cell of ``bucketed``'s vec_id rows) with hot cells
+    SALT-SPLIT so no reducer's pair work exceeds ~occ × _SALT_MAX_OCC
+    (``max_occ`` overrides the cap).
 
     The plain self-join shuffles both sides on the cell key: one
     clustered-corpus cell of occupancy m lands m² candidate work on ONE
-    reducer — at the r14 detector study's planted corpus that is
-    bounded (occ 819), but a production embedding corpus with a
-    mega-cluster is exactly the straggler the skew column warns about.
-    Lossless split: each cell of occupancy m gets s = ⌈m/cap⌉ salt
-    groups; the LEFT side keeps one deterministic group per row
-    (xxhash64(id) mod s), the RIGHT side replicates each row into all s
-    groups, and the join adds _salt to the equi key — pair (a, b) with
-    a < b matches exactly where b's replica meets a's group, so the
-    OUTPUT IS IDENTICAL to the unsalted join at every scale (the static
-    DuckDB oracle replays regardless of whether the cap engaged;
-    planted-cluster equality tests pin it per caller). Costs, by
-    construction: per-reducer pair work falls m² → m·cap; right-side
-    replication adds m²/cap rows — asymptotically FREE relative to the
-    m²/2 candidate pairs the cell emits anyway.
+    reducer — a production embedding corpus with a mega-cluster is
+    exactly the straggler the skew column warns about. Lossless split:
+    each cell of occupancy m gets s = ⌈m/cap⌉ salt groups; the LEFT side
+    keeps one deterministic group per row (xxhash64(id) mod s), the
+    RIGHT side replicates each row into all s groups, and the join adds
+    _salt to the equi key — pair (a, b) with a < b matches exactly where
+    b's replica meets a's group, so the OUTPUT IS IDENTICAL to the
+    unsalted join at every scale (the static DuckDB oracle replays
+    whether or not the cap engaged; a planted-cluster equality test pins
+    it). Costs, by construction: per-reducer pair work falls m² → m·cap;
+    right-side replication adds m²/cap rows — asymptotically free next
+    to the m²/2 candidate pairs the cell emits anyway.
 
-    Occupancy attach — TWO strategies, chosen by the CALLER's cell-key
-    cardinality (ADVICE r15: the broadcast is only legal when the
-    counts frame is bounded out-of-band):
-
-    - ``broadcast=True`` (the LSH bucket-join default): counts come
-      from a groupBy aggregate joined back with an explicit
-      F.broadcast hint. Legal ONLY for geometry-capped cell domains —
-      here ≤ n_tables · 2^n_planes ≤ 45·2¹⁶ ≈ 2.9M rows (~47 MB) at
-      the width cap, bounded by the same construction as the IVF
-      centroid broadcast, and KBs at any fixture scale.
-    - ``broadcast=False`` (the MinHash/SimHash band joins, r16): band
-      keys are raw xxhash64 VALUES, so the distinct-cell count scales
-      with the corpus (≈ n · n_bands on a mostly-unique corpus) — a
-      broadcast would ship a data-scaled frame to every executor.
-      Occupancy is attached with a count over
-      Window.partitionBy(cell_cols) instead (partitioned — each cell
-      lands whole on one reducer at O(occ) cost, the same placement
-      the unsalted self-join forced anyway), the result is PERSISTED
-      (it feeds four join sides; see the in-code comment), and the
-      join is SPLIT by occupancy: cold cells (occ ≤ cap — ALL cells on
-      uniform corpora) take the historical plain self-join, hot cells
-      alone pay the salt machinery, and the union is exactly the
-      single salted join's output because occupancy is a cell property
-      — no pair straddles the split. Measured at sf0.1: the split +
-      persist holds the overhead to ~+0.7 s on q_dedup_near's pair
-      stage vs ~+4 s for a naive single salted join.
-
-    ``carry_cols`` rides payload columns through the self-join for
-    callers whose post-join filters need both sides (the band joins'
-    first-collision-band guard and SimHash hamming check): each carried
-    column c emits as c_a / c_b, and the cell-key columns (equal on
-    both sides by the equi-join) emit once under their own names. With
-    the default empty tuple the output is exactly the historical
-    (doc_id, nn_id) shape — the embed-cosine caller's plan is
-    byte-identical to r15.
-
-    Dormancy, per caller: the LSH bucket caller is provably dormant at
-    every fixture scale (max occupancy ≈ 2× target, test-pinned). The
-    band callers are dormant at the ORACLE scales (sf0.001/sf0.01 max
-    band occupancy 292/272 minhash, 83/73 simhash — so the static
-    DuckDB oracles replay over the historical pair join) and genuinely
-    ENGAGED at sf0.1, where the deliberately self-similar fixture's
-    near-dup clusters exceed the cap (minhash 8 cells, occ_max 2700;
-    simhash 1 cell, occ 710): the benched plans run the hot path for
-    real, with the planted-cluster equality tests pinning losslessness.
+    Occupancy comes from a groupBy aggregate joined back with an explicit
+    F.broadcast hint. That is legal because the cell domain is capped by
+    the geometry, not the data: ≤ n_tables · 2^n_planes ≤ 45·2¹⁶ ≈ 2.9M
+    rows (~47 MB) at the width cap, bounded by the same construction as
+    the IVF centroid broadcast, and KBs at any fixture scale, where the
+    maximum occupancy is ≈ 2× target and the split stays dormant
+    (test-pinned).
     """
     cap = _SALT_MAX_OCC if max_occ is None else max_occ
-    cells = list(cell_cols)
-    base = bucketed.select(id_col, *cells, *carry_cols)
-
-    def _half(left: DataFrame, right: DataFrame, salted: bool) -> DataFrame:
-        # left-associated in cell order, then _salt, then the half-pair
-        # inequality — the exact predicate shape of the r15 plan, so
-        # the embed-cosine caller's fingerprint is untouched
-        cond = None
-        for c in cells:
-            eq = F.col(f"a.{c}") == F.col(f"b.{c}")
-            cond = eq if cond is None else cond & eq
-        if salted:
-            cond = cond & (F.col("a._salt") == F.col("b._salt"))
-        cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        out_cols = [
-            F.col(f"a.{id_col}").alias("doc_id"),
-            F.col(f"b.{id_col}").alias("nn_id"),
-        ]
-        if carry_cols:
-            out_cols += [F.col(f"a.{c}") for c in cells]
-            out_cols += [
-                F.col(f"a.{c}").alias(f"{c}_a") for c in carry_cols
-            ]
-            out_cols += [
-                F.col(f"b.{c}").alias(f"{c}_b") for c in carry_cols
-            ]
-        return left.alias("a").join(right.alias("b"), cond).select(*out_cols)
-
-    if broadcast:
-        counts = bucketed.groupBy(*cells).agg(
-            F.count(F.lit(1)).alias("_occ")
-        )
-        wb = base.join(F.broadcast(counts), cells).withColumn(
-            "_s", F.ceil(F.col("_occ") / F.lit(cap)).cast("int")
-        )
-        left = wb.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(F.col(id_col)), F.col("_s")).cast("int"),
-        )
-        right = wb.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
-        )
-        return _half(left, right, salted=True)
-
-    # broadcast=False (the band joins): occupancy attaches via a
-    # partitioned window count — ONE extra hash exchange of the slim
-    # banded rows (each cell lands whole on one reducer at O(occ) cost,
-    # the same placement the unsalted self-join forced anyway), never a
-    # broadcast of the data-scaled cell domain. The table is PERSISTED:
-    # it feeds both sides of both joins below, and without the persist
-    # the input derivation + window execute once per subtree (measured
-    # at sf0.1: q_dedup_near 4.3 → 8.8 s). Slim rows — ids + hash keys
-    # + two ints (_CACHE_OWNERSHIP census, dedup.py module top),
-    # session-lifetime like every persist in the dedup family;
-    # MEMORY_AND_DISK spills, never OOMs.
-    from pyspark import StorageLevel
-
+    cells = ["tbl", "bucket"]
+    counts = bucketed.groupBy(*cells).agg(F.count(F.lit(1)).alias("_occ"))
     wb = (
-        base.withColumn(
-            "_occ", F.count(F.lit(1)).over(W.partitionBy(*cells))
-        )
+        bucketed.select("vec_id", *cells)
+        .join(F.broadcast(counts), cells)
         .withColumn("_s", F.ceil(F.col("_occ") / F.lit(cap)).cast("int"))
-        # _occ only feeds _s — dropping it before the persist keeps the
-        # cached projection one long-column slimmer per row
-        .drop("_occ")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # COLD/HOT split (r16): occupancy is a CELL property, so the pair
-    # set partitions exactly — a pair is co-bucketed in a cell that is
-    # either under the cap (cold) or over it (hot), never both. Cold
-    # cells (ALL cells, on every uniform/fixture corpus) take the
-    # historical plain self-join, whose two sides are canonically
-    # identical → one exchange + ReusedExchange, exactly the pre-r16
-    # plan shape over the persisted table. Only hot-cell rows pay the
-    # salt machinery (left keeps one group, right explodes s replicas),
-    # and on dormant corpora the hot side is EMPTY — AQE propagates the
-    # empty relation and the union degenerates to the cold join alone.
-    cold = wb.filter(F.col("_s") <= 1)
-    hot = wb.filter(F.col("_s") > 1)
-    hot_left = hot.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.col("_s")).cast("int")
+    left = wb.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.col("vec_id")), F.col("_s")).cast("int")
     )
-    hot_right = hot.withColumn(
+    right = wb.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.col("_s") - 1))
     )
-    return _half(cold, cold, salted=False).unionByName(
-        _half(hot_left, hot_right, salted=True)
+    cond = (
+        (F.col("a.tbl") == F.col("b.tbl"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a._salt") == F.col("b._salt"))
+        & (F.col("a.vec_id") < F.col("b.vec_id"))
+    )
+    return (
+        left.alias("a")
+        .join(right.alias("b"), cond)
+        .select(
+            F.col("a.vec_id").alias("doc_id"), F.col("b.vec_id").alias("nn_id")
+        )
     )
 
 

@@ -259,6 +259,7 @@ def cds_plan(cds_dir: str, extra_conf: dict[str, str]) -> tuple[str, str]:
             return "off", ""
         os.makedirs(os.path.join(cds_dir, "conf"), exist_ok=True)
         key = launch_key(extra_conf, cds_dir)
+        drop_dead_keys(cds_dir, key)
         archive = settle_archive(cds_dir, key)
         if archive:
             return "mapped", archive
@@ -369,6 +370,21 @@ def settle_archive(cds_dir: str, key: str) -> str | None:
         else:
             _unlink(part)
     return archive if is_complete_archive(archive) else None
+
+
+def drop_dead_keys(cds_dir: str, key: str) -> None:
+    """Remove the archive, recordings and lock of every key but ``key``,
+    except a key whose lock names a live process. A key stops matching
+    when the Java runtime, the Spark jars, the heap mode or the
+    checkout's path change, and its ~200 MB archive would otherwise stay
+    for good. A JVM that still maps a removed archive keeps its pages."""
+    for path in glob.glob(os.path.join(cds_dir, "*")):
+        name = os.path.basename(path)
+        other = name.split(".", 1)[0]
+        if other == key or not name.endswith((".jsa", ".part", ".lock")):
+            continue
+        if not _owner_alive(os.path.join(cds_dir, f"{other}.lock")):
+            _unlink(path)
 
 
 def take_lock(lock: str) -> bool:

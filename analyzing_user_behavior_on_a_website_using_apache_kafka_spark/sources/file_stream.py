@@ -205,9 +205,8 @@ def run_stream(
     Stateful operators run at ``DEFAULT_STREAM_SHUFFLE_PARTITIONS``
     partitions, read at call time, on the session's state store provider.
     ``checkpoint_dir``: a caller-supplied checkpoint is kept after the run
-    (state-introspection tests and tools/state_probe.py read the stores
-    back); by default each attempt takes a fresh one, removed however the
-    attempt ends.
+    (the state-introspection tests read the stores back); by default
+    each attempt takes a fresh one, removed however the attempt ends.
     """
     spark = stream_df.sparkSession
     write_mode = "overwrite" if output_mode == "complete" else "append"

@@ -243,9 +243,8 @@ def click_purchase_join_plan(
     how: str = "inner",
 ) -> DataFrame:
     """The click→purchase interval-join STREAMING plan, shared by the
-    registered queries below, the state-introspection tests, and
-    tools/state_probe.py (one copy of the plan all three measure —
-    r13 review: three hand copies had started to drift-risk).
+    registered queries below and the state-introspection tests (one
+    copy of the plan that both measure).
     `delay` is the watermark on both sides — the state-retention knob
     the introspection tests turn."""
     clicks = (
@@ -299,10 +298,9 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join condition includes the time-range bound, so Spark derives a
     state-retention horizon per side: a buffered click is dropped once
     the purchase watermark passes click_ts + 30 min — state is bounded
-    by (rate × window), NOT by stream length (measured directly since
-    r13: tools/state_probe.py reads the retained store rows through the
-    statestore source at 1×/10×/100× event rate — exponent 1.00,
-    SCALE.md). Output is append (matches
+    by (rate × window), NOT by stream length (the retained store rows,
+    read through the statestore source at 1×/10×/100× event rate, grow
+    with exponent 1.00, SCALE.md). Output is append (matches
     emit exactly once); the batch oracle is the identical interval join,
     which the single-batch AvailableNow run reproduces exactly.
     """

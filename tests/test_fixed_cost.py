@@ -1,8 +1,7 @@
 """Per-op fixed costs that every query pays before its first row:
-schema inference on a table load, the band tables of the two LSH
-dedup operators, the LSH coefficient-matrix build, and the compilation
-of generated classes that a too-small codegen cache evicts. Each cut
-must leave the output exactly as it was."""
+schema inference on a table load, the LSH coefficient-matrix build, and
+the compilation of generated classes that a too-small codegen cache
+evicts. Each cut must leave the output exactly as it was."""
 
 from __future__ import annotations
 
@@ -17,13 +16,11 @@ import uuid
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.catalog import (
     load_table,
 )
 from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions import (
-    dedup,
     similarity,
 )
 
@@ -84,56 +81,6 @@ def test_table_rewritten_with_an_extra_column_reads_its_new_schema(
     df = load_table(spark, str(tmp_path), "region")
     assert df.columns == ["r_regionkey", "r_comment"]
     assert sorted(map(tuple, df.collect())) == [(0, "x"), (1, "y"), (2, "z")]
-
-
-def _union_banded(keyed, key_cols):
-    """The per-band ``unionByName`` form the band tables were built as."""
-    bands = [
-        keyed.select(
-            "doc_id",
-            *key_cols,
-            F.lit(j).alias("band_id"),
-            F.col(c).alias("band_key"),
-        )
-        for j, c in enumerate(key_cols)
-    ]
-    out = bands[0]
-    for b in bands[1:]:
-        out = out.unionByName(b)
-    return out
-
-
-def test_band_tables_equal_the_union_form(spark, sf_dir):
-    mh_sigs = dedup.minhash_signatures(spark, sf_dir)
-    rows = dedup._N_HASHES // dedup._N_BANDS
-    mh_keyed = mh_sigs.select(
-        "doc_id",
-        *[
-            F.xxhash64(
-                *[f"mh_{i}" for i in range(b * rows, (b + 1) * rows)]
-            ).alias(f"bk_{b}")
-            for b in range(dedup._N_BANDS)
-        ],
-    )
-    sh_sigs = dedup.simhash_fingerprints(spark, sf_dir)
-    for got, want in (
-        (
-            dedup.minhash_banded(mh_sigs),
-            _union_banded(
-                mh_keyed, [f"bk_{b}" for b in range(dedup._N_BANDS)]
-            ),
-        ),
-        (
-            dedup.simhash_banded(sh_sigs),
-            _union_banded(
-                sh_sigs, [f"sh{j}" for j in range(dedup._SIMHASH_BANDS)]
-            ),
-        ),
-    ):
-        assert got.schema == want.schema
-        got_rows = sorted(map(tuple, got.collect()))
-        assert got_rows == sorted(map(tuple, want.collect()))
-        assert len(got_rows) > 0
 
 
 def _scalar_coeff_matrix(dim: int) -> np.ndarray:

@@ -519,8 +519,17 @@ def test_minhash_banding_finds_true_near_dups(spark, sf_dir):
     rows): P(miss) = (1−j⁴)⁸ ≈ 1.4e-6 at j=0.95, ≈1.5% at j=0.8. The
     fixture corpus shares a small vocabulary so token-SET jaccard runs
     high — thousands of true pairs make the recall measurement tight:
-    every j ≥ 0.95 pair must surface, recall(j ≥ 0.8) ≥ 0.95, and the
-    sketch estimate must track truth within sketch error."""
+    every j ≥ 0.95 pair must be a candidate, recall(j ≥ 0.8) ≥ 0.95, and
+    the sketch estimate must track truth within sketch error. A pair is
+    a candidate iff some band's 4 minhashes agree (equal band keys, up
+    to an xxhash64 collision), computed here from the collected
+    signatures."""
+    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
+        _N_BANDS,
+        _N_HASHES,
+        minhash_signatures,
+    )
+
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = {r.doc_id: set(r.text.split()) for r in d.collect()}
     true_pairs = {}
@@ -533,26 +542,56 @@ def test_minhash_banding_finds_true_near_dups(spark, sf_dir):
             j = inter / len(toks[a] | toks[b])
             if j >= 0.8:
                 true_pairs[(a, b)] = j
+    sigs = {
+        r.doc_id: [r[f"mh_{i}"] for i in range(_N_HASHES)]
+        for r in minhash_signatures(spark, sf_dir).collect()
+    }
+    rows = _N_HASHES // _N_BANDS
+
+    def candidate(a, b):
+        return any(
+            sigs[a][k * rows:(k + 1) * rows] == sigs[b][k * rows:(k + 1) * rows]
+            for k in range(_N_BANDS)
+        )
+
+    # the registered query is the driver-facing view of the same
+    # invariant: every true j>=0.95 pair flagged in_lsh, and each flag
+    # is the band predicate above
+    inv = registry.all_queries()["q_dedup_near"](spark, sf_dir).collect()
+    assert inv and all(r.in_lsh for r in inv)
+    assert all(r.in_lsh == int(candidate(r.doc_a, r.doc_b)) for r in inv)
+    certain = {p for p, j in true_pairs.items() if j >= 0.95}
+    missed_certain = {p for p in certain if not candidate(*p)}
+    assert not missed_certain, f"missed j>=0.95 pairs: {sorted(missed_certain)[:5]}"
+    found = [p for p in true_pairs if candidate(*p)]
+    recall = len(found) / len(true_pairs)
+    assert recall >= 0.95, f"recall(j>=0.8) = {recall:.3f}"
+    for a, b in found:
+        est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / _N_HASHES
+        assert abs(est - true_pairs[(a, b)]) < 0.3, (a, b, true_pairs[(a, b)], est)
+
+
+def test_band_hits_compare_keys_within_a_band_only(spark):
+    """The flag of both banded queries on hand-built keys: a pair is a
+    hit iff some band j has equal keys on both sides. Doc 1's band-0 key
+    equal to doc 4's band-1 key would meet in no band bucket, so it is
+    no hit (an arrays_overlap of the two key lists would call it one)."""
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
-        minhash_lsh_pairs,
+        band_hits,
     )
 
+    keys = spark.createDataFrame(
+        [(1, 10, 20), (2, 11, 21), (3, 12, 20), (4, 98, 10)],
+        "doc_id bigint, k_0 bigint, k_1 bigint",
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4)], "doc_a bigint, doc_b bigint"
+    )
     got = {
-        (r.doc_a, r.doc_b): r.est_jaccard
-        for r in minhash_lsh_pairs(spark, sf_dir).collect()
+        (r.doc_a, r.doc_b): int(r.band_hit)
+        for r in band_hits(pairs, keys).collect()
     }
-    # the registered query is the driver-facing view of the same
-    # invariant: every true j>=0.95 pair flagged in_lsh
-    inv = registry.all_queries()["q_dedup_near"](spark, sf_dir)
-    assert all(r.in_lsh for r in inv.collect())
-    certain = {p for p, j in true_pairs.items() if j >= 0.95}
-    missed_certain = certain - set(got)
-    assert not missed_certain, f"missed j>=0.95 pairs: {sorted(missed_certain)[:5]}"
-    found = len(set(true_pairs) & set(got))
-    recall = found / len(true_pairs)
-    assert recall >= 0.95, f"recall(j>=0.8) = {recall:.3f}"
-    for p in set(true_pairs) & set(got):
-        assert abs(got[p] - true_pairs[p]) < 0.3, (p, true_pairs[p], got[p])
+    assert got == {(1, 2): 0, (1, 3): 1, (1, 4): 0}
 
 
 def test_minhash_signature_matches_python_reference(spark, sf_dir):
@@ -603,20 +642,6 @@ def test_minhash_signature_matches_python_reference(spark, sf_dir):
     # distinct mh_0 values over 5k docs is legitimate for the 31-word
     # fixture vocabulary; ONE value for every doc is not)
     assert len({tuple(s) for s in sigs.values()}) > 2
-
-
-def test_near_dup_self_consistency(spark, sf_dir):
-    # every near-dup candidate pair must estimate jaccard in [0, 1] and
-    # be ordered doc_a < doc_b with no duplicates
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    rows = minhash_lsh_pairs(spark, sf_dir).collect()
-    pairs = [(r.doc_a, r.doc_b) for r in rows]
-    assert len(pairs) == len(set(pairs))
-    assert all(a < b for a, b in pairs)
-    assert all(0.0 <= r.est_jaccard <= 1.0 for r in rows)
 
 
 def test_dedup_clusters_are_transitive_and_keepered(spark, sf_dir):
@@ -701,10 +726,8 @@ def test_langid_one_prediction_per_doc(spark, sf_dir):
 
 def test_simhash_hamming_bounds(spark, sf_dir):
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
-        _HAMMING_MAX,
         _SIMHASH_BANDS,
         _SIMHASH_BAND_WIDTH,
-        simhash_band_pairs,
         simhash_fingerprints,
     )
 
@@ -759,110 +782,11 @@ def test_simhash_hamming_bounds(spark, sf_dir):
         assert sigs[row.doc_id] == want_fp, row.doc_id
     # degenerate guard: fingerprints must not collapse to two values
     assert len(set(sigs.values())) > 2
-    # band completeness (the pigeonhole losslessness claim): EVERY pair
-    # at hamming ≤ 3 must surface from the banded join — checked against
-    # a Python all-pairs scan over the collected fingerprints
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_band_pairs(spark, sf_dir).collect()
-    }
-    ids = sorted(sigs)
-    want = {
-        (a, b): (sigs[a] ^ sigs[b]).bit_count()
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if (sigs[a] ^ sigs[b]).bit_count() <= _HAMMING_MAX
-    }
-    assert got == want
     # the registered invariant view: identical-token-set pairs must all
     # be in-bands at hamming 0 (what the DuckDB oracle asserts)
     rows = registry.all_queries()["q_dedup_simhash"](spark, sf_dir).collect()
     assert rows  # fixture has identical-token-set dups
     assert all(r.hamming == 0 and r.in_bands == 1 for r in rows)
-
-
-def test_simhash_wide_geometry_bit_exact(spark, sf_dir):
-    """The 256-bit / 4×64-band geometry (engaged by
-    _simhash_band_bits_for above ~4.6M docs) FORCED at fixture scale
-    and held to the same bar as the 128-bit path: bit-exact equality
-    with a pure-Python sign-sum over the collected token hashes (the
-    r11 anti-degeneracy lesson — self-consistency checks pass on a
-    degenerate fingerprint; only an independent construction catches
-    it), plus band completeness for hamming ≤ 3 against an all-pairs
-    scan. 64-bit band words may use the int64 sign bit, so the replay
-    reduces them mod 2⁶⁴."""
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
-        _HAMMING_MAX,
-        _SIMHASH_BANDS,
-        _simhash_band_bits_for,
-        simhash_band_pairs,
-        simhash_fingerprints,
-    )
-
-    # the width rule itself: fixture/probe scales keep 32-bit bands
-    # (oracle + baseline comparability), the transition (n ≈ 4.6M,
-    # where expected chance candidates pass the absolute 10k budget)
-    # enforces the ceiling rather than narrating it, and a 100 TB-class
-    # corpus is firmly on the wide side
-    for n, want in (
-        (500, 32),
-        (5000, 32),
-        (500_000, 32),
-        (4_000_000, 32),
-        (5_000_000, 64),
-        (10_000_000_000, 64),
-    ):
-        assert _simhash_band_bits_for(n) == want, n
-
-    def fp(row):
-        v = 0
-        for j in range(_SIMHASH_BANDS):
-            v |= (row[f"sh{j}"] % (1 << 64)) << (j * 64)
-        return v
-
-    sigs = {
-        r.doc_id: fp(r)
-        for r in simhash_fingerprints(spark, sf_dir, band_bits=64).collect()
-    }
-    toks = F.array_distinct(
-        F.filter(F.split("text", " "), lambda w: w != "")
-    )
-    hashed = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.transform(toks, lambda w: F.xxhash64(w)).alias("h0"),
-        F.transform(toks, lambda w: F.xxhash64(F.lit(1), w)).alias("h1"),
-        F.transform(toks, lambda w: F.xxhash64(F.lit(2), w)).alias("h2"),
-        F.transform(toks, lambda w: F.xxhash64(F.lit(3), w)).alias("h3"),
-    )
-    for row in hashed.collect():
-        fams = (row.h0, row.h1, row.h2, row.h3)
-        want_fp = 0
-        for g in range(256):
-            hs = fams[g // 64]
-            b = g % 64
-            ones = sum(1 for h in hs if (h >> b) & 1)
-            if ones * 2 > len(hs):
-                want_fp |= 1 << g
-        assert sigs[row.doc_id] == want_fp, row.doc_id
-    assert len(set(sigs.values())) > 2  # non-degenerate
-    # band completeness at the wide geometry (pigeonhole needs only
-    # >=4 bands, so losslessness must survive the widening)
-    got = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in simhash_band_pairs(spark, sf_dir, band_bits=64).collect()
-    }
-    ids = sorted(sigs)
-    want = {
-        (a, b): (sigs[a] ^ sigs[b]).bit_count()
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if (sigs[a] ^ sigs[b]).bit_count() <= _HAMMING_MAX
-    }
-    assert got == want
-    # identical token sets still collide in every band at hamming 0 —
-    # the driver-checked oracle invariant is geometry-independent
-    assert want, "fixture should contain identical-token-set dups"
-    assert 0 in want.values()
 
 
 def test_lsh_bucket_udf_matches_expression_path(spark, sf_dir):
@@ -1201,85 +1125,25 @@ def test_salted_pairs_lossless_on_planted_clusters(spark, sf_dir):
     assert salt_splits_for(501) == 2
 
 
-def test_band_salting_dormant_at_oracle_scales(spark, sf_dir):
-    """r16 (VERDICT r15 item 2): the MinHash and SimHash band
-    self-joins now route through salted_half_pairs with cell key
-    (band_id, band_key). The oracle-replay argument, MEASURED at BOTH
-    oracle scales (the test fixture and sf0.01, where the driver's
-    DuckDB comparison runs): every band-cell occupancy sits under
-    _SALT_MAX_OCC, so s = 1 everywhere, the salt columns degenerate,
-    and both static oracles replay over the historical pair join. NOT
-    asserted at sf0.1 — the self-similar fixture's near-dup clusters
-    genuinely engage the cap there (minhash 8 cells over, occ_max
-    2700; simhash 1, occ 710 — SCALE.md r16), which the planted-
-    cluster lossless-equality test below covers."""
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
-        minhash_banded,
-        minhash_signatures,
-        simhash_banded,
-        simhash_fingerprints,
-    )
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.similarity import (
-        _SALT_MAX_OCC,
-    )
-
-    sf_dirs = {sf_dir, "/root/testdata/sf0.01"}
-    for d in sorted(sf_dirs):
-        if not os.path.isdir(d):
-            continue
-        for name, banded in (
-            ("minhash", minhash_banded(minhash_signatures(spark, d))),
-            ("simhash", simhash_banded(simhash_fingerprints(spark, d))),
-        ):
-            occ_max = (
-                banded.groupBy("band_id", "band_key")
-                .count()
-                .agg(F.max("count"))
-                .collect()[0][0]
-            )
-            assert occ_max < _SALT_MAX_OCC, (
-                f"{name}@{d} max band-cell occupancy {occ_max} reaches "
-                f"the salt cap {_SALT_MAX_OCC} — the oracle-scale "
-                "dormancy premise broke"
-            )
-
-
-def test_band_salted_joins_lossless_on_planted_duplicate_cluster(
-    spark, sf_dir, tmp_path, monkeypatch
+def test_planted_duplicate_cluster_flags_every_clone_pair(
+    spark, sf_dir, tmp_path
 ):
-    """The band-join salting on the corpus class it exists for (r16,
-    VERDICT r15 item 2 — the test_salted_pairs_lossless template
-    applied to both band spaces): a corpus with a PLANTED duplicate
-    cluster (31 identical texts → one occ≥31 cell in every band) and
-    the cap FORCED low enough to engage. Each salted band join must
-    (a) actually split the hot cells (s ≥ 4 at cap 8 — not a vacuous
-    pass) and (b) emit EXACTLY the pair set of a dormant run (cap
-    effectively infinite, where the salt provably degenerates to the
-    historical join) — the lossless claim that lets both static
-    oracles replay at any scale, salted or not."""
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.catalog import (
-        load_table,
-    )
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions import (
-        dedup,
-        similarity,
-    )
+    """A corpus with a PLANTED duplicate cluster: the first document and
+    30 clones of its text, 31 identical texts whose band keys are equal
+    in every band. Both banded queries must list every one of the 465
+    clone pairs and flag it: q_dedup_near with jaccard 1.0 and in_lsh
+    1, q_dedup_simhash with hamming 0 and in_bands 1."""
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.session import (
         evict_caches,
     )
 
     base = load_table(spark, sf_dir, "documents")
     seed = base.orderBy("doc_id").limit(1).collect()[0]
+    clone_ids = [10_000_000 + j for j in range(30)]
     clones = spark.createDataFrame(
         [
-            (
-                10_000_000 + j,
-                seed.text,
-                seed.lang,
-                seed.source,
-                seed.n_chars,
-            )
-            for j in range(30)
+            (doc_id, seed.text, seed.lang, seed.source, seed.n_chars)
+            for doc_id in clone_ids
         ],
         "doc_id bigint, text string, lang string, source string, "
         "n_chars bigint",
@@ -1289,42 +1153,21 @@ def test_band_salted_joins_lossless_on_planted_duplicate_cluster(
         planted + "/documents.parquet"
     )
     try:
-        cap = 8
-        for name, fn in (
-            ("minhash", dedup.minhash_lsh_pairs),
-            ("simhash", dedup.simhash_band_pairs),
-        ):
-            # engagement premise: the planted cluster exceeds the cap
-            sigs = (
-                dedup.minhash_signatures(spark, planted)
-                if name == "minhash"
-                else dedup.simhash_fingerprints(spark, planted)
-            )
-            banded = (
-                dedup.minhash_banded(sigs)
-                if name == "minhash"
-                else dedup.simhash_banded(sigs)
-            )
-            occ_max = (
-                banded.groupBy("band_id", "band_key")
-                .count()
-                .agg(F.max("count"))
-                .collect()[0][0]
-            )
-            assert occ_max > cap, (
-                f"{name}: planted max occupancy {occ_max} never exceeds "
-                f"the forced cap {cap} — the engagement premise broke"
-            )
-            assert -(-occ_max // cap) >= 4  # s ≥ 4: a real split
-            monkeypatch.setattr(similarity, "_SALT_MAX_OCC", cap)
-            engaged = sorted(map(tuple, fn(spark, planted).collect()))
-            monkeypatch.setattr(similarity, "_SALT_MAX_OCC", 10**9)
-            dormant = sorted(map(tuple, fn(spark, planted).collect()))
-            assert engaged == dormant, (
-                f"{name}: salted band join diverged — "
-                f"{len(engaged)} vs {len(dormant)} rows"
-            )
-            assert len(engaged) >= 30 * 29 // 2  # the cluster's pairs
+        ids = sorted([seed.doc_id, *clone_ids])
+        want = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
+        assert len(want) == 31 * 30 // 2
+        qs = registry.all_queries()
+        near = {
+            (r.doc_a, r.doc_b): (r.jaccard, r.in_lsh)
+            for r in qs["q_dedup_near"](spark, planted).collect()
+        }
+        sim = {
+            (r.doc_a, r.doc_b): (r.hamming, r.in_bands)
+            for r in qs["q_dedup_simhash"](spark, planted).collect()
+        }
+        for p in want:
+            assert near.get(p) == (1.0, 1), (p, near.get(p))
+            assert sim.get(p) == (0, 1), (p, sim.get(p))
     finally:
         # tmp-corpus relations/memos must not linger in session state
         evict_caches(spark)

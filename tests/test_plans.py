@@ -912,44 +912,3 @@ def test_session_cache_stays_slim_across_full_persisting_sweep(spark):
         # sf0.1 relations + memos keyed to a non-default corpus must
         # not leak into later tests' sf0.001 session state
         evict_caches(spark)
-
-
-def test_minhash_pair_rebalance_exchange_is_pinned(spark, sf_dir):
-    """r11 lesson, r12 pin (VERDICT r11 task 6): the band self-join's
-    output partitioning is (band_id, band_key), and band-bucket skew IS
-    the dup-cluster distribution — feeding the per-pair est-jaccard
-    stage straight off bucket partitioning serializes everything behind
-    the hottest bucket (measured: est stage 0.7 → 6.2 s at sf0.1
-    without the rebalance; the signature re-attach joins broadcast, so
-    NO exchange would intervene on its own). The load-bearing line is a
-    single `.repartition("doc_a", "doc_b")` of the slim pair rows; this
-    asserts it is still in the plan, ABOVE the band join and below the
-    re-attach joins, so a future simplification can't silently drop it."""
-    import re
-
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    plan = (
-        minhash_lsh_pairs(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    m = re.search(
-        r"Exchange hashpartitioning\(doc_a#\d+L?, doc_b#\d+L?,.*"
-        r"REPARTITION_BY_COL",
-        plan,
-    )
-    assert m, (
-        "pair rebalance gone: no REPARTITION_BY_COL exchange on "
-        "(doc_a, doc_b) between the band join and the est stage\n"
-        + plan[:2000]
-    )
-    band_join = re.search(r"Join \[?band_id|Join.*band_key|HashJoin \[band_id", plan)
-    assert band_join, "band join not found in plan\n" + plan[:2000]
-    assert m.start() < band_join.start(), (
-        "rebalance exchange is not a parent of the band join — the est "
-        "stage would run on bucket-partitioned pairs"
-    )

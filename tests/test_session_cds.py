@@ -136,6 +136,29 @@ def test_plan_records_once_then_maps(tmp_path, monkeypatch):
     assert session.cds_plan(cds, {}) == ("mapped", os.path.join(cds, f"{key}.jsa"))
 
 
+def test_plan_drops_the_files_of_dead_keys(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "no-conf-dir"))
+    cds = tmp_path / "cds"
+    key = session.launch_key({}, str(cds))
+    own = _write(cds / f"{key}.jsa", session.CDS_MAGIC + JUNK)
+    _write(cds / f"{key}.lock", str(_dead_pid()).encode())
+    dead = [
+        _write(cds / "k2.jsa", session.CDS_MAGIC + JUNK),
+        _write(cds / "k2.aa.part", JUNK),
+        _write(cds / "k2.lock", str(_dead_pid()).encode()),
+        _write(cds / "k3.jsa", session.CDS_MAGIC + JUNK),  # no lock at all
+    ]
+    live = [
+        _write(cds / "k4.jsa", session.CDS_MAGIC + JUNK),
+        _write(cds / "k4.bb.part", JUNK),
+        _write(cds / "k4.lock", str(os.getpid()).encode()),
+    ]
+    assert session.cds_plan(str(cds), {}) == ("mapped", own)
+    assert [p for p in dead if os.path.exists(p)] == []
+    assert all(os.path.exists(p) for p in live)
+    assert os.path.exists(cds / f"{key}.lock") and os.path.isdir(cds / "conf")
+
+
 def _launch_options(monkeypatch, mode: str, path: str, extra_conf: dict):
     """What ``_launch`` hands the builder, and ``SPARK_CONF_DIR`` at the
     gateway launch, with ``getOrCreate`` replaced by a recorder."""

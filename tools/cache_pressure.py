@@ -30,11 +30,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # the package to re-derive).  A new persisting key belongs HERE plus in
 # session.evict_caches if it adds a memo dict.
 PERSISTING_KEYS: tuple[str, ...] = (
-    "q_dedup_near",            # minhash signatures + salted band table (r16)
+    "q_dedup_near",            # minhash signatures
     "q_dedup_ngram_jaccard",   # jaccard prefix postings (+ _PAIR_CACHE)
     "q_dedup_containment",     # containment ordered tokens
     "q_dedup_editdist",        # location-prefix postings
-    "q_dedup_simhash",         # simhash signatures + salted band table (r16)
+    "q_dedup_simhash",         # simhash fingerprints
     "q_dedup_embed_cosine",    # LSH buckets + scored half-pairs
     "q_dedup_semantic",        # centroid assignment
     "q_dedup_clusters",        # verified-pair memo (_PAIR_CACHE)
@@ -66,10 +66,10 @@ def _materialize(df) -> None:
     """Run the query computing EVERY output column — .count() is the
     wrong consumer here: Catalyst eliminates a left-outer join under a
     count when the right side's join keys are distinct and no right
-    column survives pruning (q_dedup_simhash's candidate side — with
-    its persisted signature table — vanished from the census exactly
-    this way; the driver's collect() does execute it).  hash(*) over
-    all columns defeats the pruning at a one-row result cost."""
+    column survives pruning, and a persisted relation on that side then
+    vanishes from the census although the driver's collect() does
+    execute it.  hash(*) over all columns defeats the pruning at a
+    one-row result cost."""
     from pyspark.sql import functions as F
 
     df.select(

@@ -126,28 +126,19 @@ PROBES = {
 # because exact copies make output grow ~K². The SPARSE replica below
 # rewrites every whitespace token with a replica-unique suffix, so:
 #   - cross-replica token sets are fully DISJOINT -> Jaccard /
-#     containment / MinHash-band cross-pairs are exactly zero;
+#     containment / identical-token-set cross-pairs are exactly zero;
 #   - cross-replica edit distance >= 2 x token count >= 2 x 10 > _ED_D
 #     (suffix `_i_i` differs from `_j_j` in >=2 chars per token);
 #   - within-replica pair sets are identical across replicas (the
 #     rewrite is a per-replica bijection on tokens);
 # so TRUE OUTPUT grows exactly K-linearly and the exponent measures
 # the candidate-generation plan, not the fixture's self-similarity.
-# SimHash chance band collisions grow ~bands·n²/2^width regardless of
-# data sparsity — a real saturation property of fixed-width banding
-# that the probe should SHOW, not hide. r10 measured the old 4×15-bit
-# bands quadratic (exponent 1.96, 1739 s at 100×); r11 widened to
-# 4×32-bit bands; r13 made the width CORPUS-ADAPTIVE
-# (dedup._simhash_band_bits_for: 4×64-bit bands above ~4.6M docs,
-# probed sub-linear through the transition at 10000× — SCALE.md r13,
-# which also corrects a 1000× inflation in the historical chance-term
-# arithmetic).
 PAIR_PROBES = {
     "q_dedup_ngram_jaccard": "prefix-filter equi-join, Ω(output)",
     "q_dedup_containment": "asymmetric prefix filter, Ω(output)",
     "q_dedup_editdist": "q-gram prefix filter + banded verify",
-    "q_dedup_near": "MinHash banded bucket join",
-    "q_dedup_simhash": "adaptive 4x32/4x64-bit band join, first-band emission",
+    "q_dedup_near": "jaccard>=0.95 prefix join + per-pair MinHash band keys",
+    "q_dedup_simhash": "token-set equi-join + per-pair SimHash band words",
     # r8: clusters consumes the jaccard pair set (K-linear on sparse
     # replicas) and runs contraction + star rounds on top — the
     # measured exponent is the full pairs→components pipeline, which
